@@ -34,12 +34,13 @@ micro-batch) pay O(1) filesystem metadata ops per statement.
 from __future__ import annotations
 
 import json
+import os
 import re
 import uuid
 
 from pyspark.sql import SparkSession
 
-from .cowtable import _fs, _jpath, _read_file, _write_file
+from .cowtable import _fs, _jpath, _local_fs_path, _read_file, _write_file
 
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)?$")
 
@@ -332,11 +333,37 @@ def views(spark: SparkSession) -> dict[str, str]:
 
 
 def resolve_or_raise(spark: SparkSession, name: str) -> str:
-    p = resolve(spark, name)
-    if p is None:
-        known = sorted(tables(spark))
-        raise ValueError(
-            f"unknown table name {name.strip()!r} — registered tables: "
-            f"{known if known else '(none)'}"
-        )
-    return p
+    return lookup(catalog_dir(spark), name)
+
+
+def lookup(cat_dir: str, name: str) -> str:
+    """Registered TABLE path for ``name`` in the catalog at ``cat_dir``,
+    read with plain file I/O — no SparkSession, so the Python data
+    sources resolve ``option("table", name)`` with it in their worker
+    processes. Unknown names (and views) raise with the registered-table
+    list. The catalog must be on the local filesystem."""
+    root = _local_fs_path(cat_dir)
+    if root is None:
+        raise ValueError(f"catalog {cat_dir!r} is not on the local filesystem")
+
+    def entry(fname):
+        with open(os.path.join(root, fname)) as fh:
+            return json.load(fh)
+
+    try:
+        fname = f"{normalize_name(name)}.json"
+    except ValueError:
+        fname = None
+    if fname and os.path.isfile(os.path.join(root, fname)):
+        e = entry(fname)
+        if e.get("kind", "table") == "table":
+            return e["path"]
+    known = sorted(
+        m.group(1)
+        for f in (os.listdir(root) if os.path.isdir(root) else [])
+        if (m := _ENTRY_RE.match(f)) and entry(f).get("kind", "table") == "table"
+    )
+    raise ValueError(
+        f"unknown table name {name.strip()!r} — registered tables: "
+        f"{known if known else '(none)'}"
+    )

@@ -87,6 +87,14 @@ from urllib.parse import urlsplit
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .hashing import (
+    BLOOM_K,
+    BLOOM_M_BITS,
+    bloom_from_positions as _build_bloom,
+    bloom_may_contain as _bloom_may_contain,
+    bucket_of_key as _bucket_of_key,
+)
+
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 DV_DIR = "_dv"
@@ -694,111 +702,12 @@ def _stat_val(v):
 # skipping inside the files the manifest could not exclude).
 #
 # Hashing must agree between the JVM (staging aggregates positions via
-# F.xxhash64) and the driver (probing a literal at plan time). The
-# probe uses this pure-Python XXH64 port, property-tested for parity
-# against Spark's xxhash64 (tests/test_cowtable.py) — no Spark job is
-# ever run just to hash one literal. Values hash through their
-# CAST(value AS STRING) form, so int and string keys both work and the
-# literal side needs no type metadata.
-BLOOM_M_BITS = 1 << 16
-BLOOM_K = 5
+# F.xxhash64) and the driver (probing a literal at plan time): the probe
+# uses the pure-Python XXH64 in ``hashing`` — no Spark job is ever run
+# just to hash one literal. Values hash through their CAST(value AS
+# STRING) form, so int and string keys both work and the literal side
+# needs no type metadata.
 _BLOOM_TYPES = ("string", "int", "bigint", "smallint", "tinyint")
-
-_XXH_P1 = 0x9E3779B185EBCA87
-_XXH_P2 = 0xC2B2AE3D27D4EB4F
-_XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
-_XXH_P5 = 0x27D4EB2F165667C5
-_U64 = (1 << 64) - 1
-
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _U64
-
-
-def _xxh_fmix(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _XXH_P2) & _U64
-    h ^= h >> 29
-    h = (h * _XXH_P3) & _U64
-    h ^= h >> 32
-    return h
-
-
-def _xxh_round(acc: int, k: int) -> int:
-    acc = (acc + k * _XXH_P2) & _U64
-    acc = _rotl64(acc, 31)
-    return (acc * _XXH_P1) & _U64
-
-
-def _xxh64_long(value: int, seed: int) -> int:
-    """XXH64 of one 64-bit integer — Spark's XxHash64.hashLong."""
-    h = (seed + _XXH_P5 + 8) & _U64
-    h ^= _xxh_round(0, value & _U64)
-    h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _U64
-    return _xxh_fmix(h)
-
-
-def _xxh64_bytes(data: bytes, seed: int) -> int:
-    """XXH64 of a byte string — Spark's XxHash64.hashUnsafeBytes."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _XXH_P1 + _XXH_P2) & _U64
-        v2 = (seed + _XXH_P2) & _U64
-        v3 = seed & _U64
-        v4 = (seed - _XXH_P1) & _U64
-        while i <= n - 32:
-            v1 = _xxh_round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _xxh_round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _xxh_round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _xxh_round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _U64
-        for v in (v1, v2, v3, v4):
-            h ^= _xxh_round(0, v)
-            h = (h * _XXH_P1 + _XXH_P4) & _U64
-    else:
-        h = (seed + _XXH_P5) & _U64
-    h = (h + n) & _U64
-    while i <= n - 8:
-        h ^= _xxh_round(0, int.from_bytes(data[i : i + 8], "little"))
-        h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _U64
-        i += 8
-    if i <= n - 4:
-        h ^= (int.from_bytes(data[i : i + 4], "little") * _XXH_P1) & _U64
-        h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _U64
-        i += 4
-    while i < n:
-        h ^= (data[i] * _XXH_P5) & _U64
-        h = (_rotl64(h, 11) * _XXH_P1) & _U64
-        i += 1
-    return _xxh_fmix(h)
-
-
-def _bloom_positions(value: str, m: int, k: int) -> list[int]:
-    """The k bit positions `value` sets/probes. Mirrors the staging
-    aggregate `pmod(xxhash64(lit(i)::long, col::string), m)`: Spark's
-    multi-arg xxhash64 chains seed 42 -> hashLong(i) -> hashBytes(col),
-    and for the power-of-two m, pmod of the signed result equals the
-    unsigned result's low bits."""
-    out = []
-    for i in range(k):
-        seed = _xxh64_long(i, 42)
-        out.append(_xxh64_bytes(value.encode("utf-8"), seed) & (m - 1))
-    return out
-
-
-def _bloom_may_contain(bl: dict, probe: str) -> bool:
-    """False only when the entry's filter PROVES the (already
-    canonicalized — see `_bloom_probe_value`) string form absent."""
-    import base64
-
-    bitmap = base64.b64decode(bl["b64"])
-    for p in _bloom_positions(probe, bl["m"], bl["k"]):
-        if not bitmap[p >> 3] & (1 << (p & 7)):
-            return False
-    return True
 
 
 def _validate_constraints(df: DataFrame, constraints: dict | None) -> None:
@@ -1061,13 +970,12 @@ def _stage_files(
                     f"CHECK constraint(s) violated by this write (name: rows): {bad}"
                 )
         except BaseException:
-            if checks:
-                # the _validate_staged_or_clean contract: on ANY
-                # validation failure the staged files (which no
-                # manifest references yet) must not orphan
-                for mv in moved:
-                    fs.delete(_jpath(spark, f"{data_root}/{mv}"), False)
-                fs.delete(sroot, True)
+            # the _validate_staged_or_clean contract, for any failure of
+            # the stats/bloom/validation pass: the staged files (which no
+            # manifest references yet) must not orphan
+            for mv in moved:
+                fs.delete(_jpath(spark, f"{data_root}/{mv}"), False)
+            fs.delete(sroot, True)
             raise
         for m in moved:
             entry: dict = {"name": m}
@@ -1214,31 +1122,9 @@ def _footer_stats(
     return out
 
 
-def _build_bloom(position_sets: list) -> dict | None:
-    """Assemble one bloom entry from the K per-seed position sets;
-    None when saturated (NDV gate: beyond ~m/8 distincts the FPP is
-    useless — omit rather than ship dead weight)."""
-    import base64
-
-    positions: set[int] = set()
-    for pos in position_sets:
-        pos = pos or []
-        if len(pos) > BLOOM_M_BITS // 8:
-            return None
-        positions.update(pos)
-    bitmap = bytearray(BLOOM_M_BITS >> 3)
-    for p in positions:
-        bitmap[p >> 3] |= 1 << (p & 7)
-    return {
-        "m": BLOOM_M_BITS,
-        "k": BLOOM_K,
-        "b64": base64.b64encode(bytes(bitmap)).decode(),
-    }
-
-
 def _bloom_aggs(bloom_cols: list[str]) -> list[Column]:
     """collect_set aggregates of the K seeded hash positions per bloom
-    column — the per-file staging-time side of `_bloom_positions`."""
+    column — the per-file staging-time side of `hashing.bloom_positions`."""
     aggs: list[Column] = []
     for c in bloom_cols:
         for i in range(BLOOM_K):
@@ -1686,16 +1572,6 @@ def _file_may_match(
         if op == ">=" and hi < val:
             return False
     return True
-
-
-# Spark-Murmur3 literal hashing + bucket-id fold: ONE implementation,
-# shared with the DSv2 reader's bucket pruning (the closures ship by
-# value into planner workers; here they bind as plain module
-# functions). Parity with F.hash — all types, chained folds — is
-# pinned by tests/test_cow_bucketed.py.
-from .sources._closure_hash import make_murmur_fns as _make_murmur_fns
-
-_spark_hash_literal, _bucket_of_key = _make_murmur_fns()
 
 
 def _bucket_candidate_filter(
@@ -6678,11 +6554,12 @@ def append_staged(
     writer): each ``entries`` item is a manifest file entry
     (``{"name", "rows", "stats", "nulls"}``) whose file already sits
     under ``data/``. Same no-read-set optimistic-commit retry loop as
-    ``append``. The ``cowsink`` streaming writer inlines this exact
-    protocol self-contained (its commit hook runs in a Python worker
-    where neither this package nor a SparkSession exists). Tables with partition columns or Bloom columns are
-    refused (staged entries carry neither); CHECK constraints are
-    enforced by reading back ONLY the staged files (O(new rows))."""
+    ``append``. The ``cowsink`` streaming writer runs the same
+    protocol with plain file I/O (``sources/_staging.commit``: its
+    commit hook runs in a Python worker without a SparkSession).
+    Tables with partition columns or Bloom columns are refused (staged
+    entries carry neither); CHECK constraints are enforced by reading
+    back ONLY the staged files (O(new rows))."""
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     if m.get("partition_by"):
         raise ValueError("append_staged does not support partitioned tables")

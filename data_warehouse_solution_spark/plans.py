@@ -160,25 +160,31 @@ def overlap_jobs(spark, *thunks):
     worker pins the JVM-thread-local ACTIVE session first: Python
     Data Source lookup and SQLConf.get resolve through
     ``SparkSession.getActiveSession``, which is unset on the fresh
-    py4j threads that back a Python thread pool."""
+    py4j threads that back a Python thread pool. When pinning fails
+    (non-classic session, internal API drift) the thunks run one after
+    another on the caller's thread instead: slower, never flaky."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def wrap(fn):
+    def pin():
+        getattr(
+            spark._jvm, "org.apache.spark.sql.classic.SparkSession"
+        ).setActiveSession(spark._jsparkSession)
+
+    def pinned(fn):
         def run():
-            try:
-                getattr(
-                    spark._jvm, "org.apache.spark.sql.classic.SparkSession"
-                ).setActiveSession(spark._jsparkSession)
-            except Exception:
-                pass  # non-classic session / API drift: best-effort
+            pin()
             return fn()
 
         return run
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
+    if len(thunks) < 2:
+        return [fn() for fn in thunks]
+    try:
+        pin()  # probe on the caller's thread, which already uses spark
+    except Exception:
+        return [fn() for fn in thunks]
     with ThreadPoolExecutor(max_workers=min(3, len(thunks))) as pool:
-        futures = [pool.submit(wrap(fn)) for fn in thunks]
+        futures = [pool.submit(pinned(fn)) for fn in thunks]
         return [f.result() for f in futures]
 
 

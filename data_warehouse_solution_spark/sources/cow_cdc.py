@@ -21,12 +21,12 @@ Design (mirrors the batch ``cowtable.changes`` exactly):
   ever being opened). Per-partition work is bounded by the commit's
   touched files, the same bound the batch CDC has.
 - **Executor-side read is pure pyarrow/pandas** (a stream reader runs
-  in a Python worker with no SparkSession): read the removed and
-  added parquet files, bag-EXCEPT them by counting (+1 added / -1
-  removed per row), and emit the net rows — a copy-on-write rewrite
-  carries unaffected rows over byte-identical, so they cancel and
-  only truly changed rows surface; a ``compact`` commit yields zero
-  rows.
+  in a Python worker with no SparkSession; it reads files with the
+  ``cow`` reader's ``_local.read_frame``): read the removed and added
+  parquet files, bag-EXCEPT them by counting (+1 added / -1 removed
+  per row), and emit the net rows — a copy-on-write rewrite carries
+  unaffected rows over byte-identical, so they cancel and only truly
+  changed rows surface; a ``compact`` commit yields zero rows.
 
 Scale/portability caveats (documented, not hidden): manifests and
 data files are opened with ``pyarrow``'s local filesystem semantics —
@@ -45,347 +45,148 @@ Usage::
 
 from __future__ import annotations
 
+from pyspark.sql.datasource import (
+    CaseInsensitiveDict,
+    DataSource,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
-def _build_stream_source_class():
-    """Factory: classes close over their deps by value (cloudpickle
-    ships them to executors; the package need not be importable
-    there) — the same closure rule as ``http_csv``."""
-    import datetime as _dt
-    import json as _json
-    import os as _os
-    import re as _re
+from . import _local
 
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamReader,
-        InputPartition,
-    )
 
-    _MANIFEST_RE = _re.compile(r"^manifest-(\d{8})\.json$")
+class CommitPartition(InputPartition):
+    def __init__(self, table_path, snapshot, removed, added, col_names, col_types, pmap):
+        self.table_path = table_path
+        self.snapshot = snapshot
+        self.removed = removed  # [(file name, dv name | None), ...]
+        self.added = added
+        self.col_names = col_names
+        self.col_types = col_types
+        self.pmap = pmap  # logical -> physical (renamed tables)
 
-    def _local(path):
-        return path[7:] if path.startswith("file://") else path.removeprefix("file:")
 
-    def _table_path_opt(options):
-        """tablePath, or a catalog NAME via ``option("table", ...)``
-        (r11 punch #5) — the self-contained ``catalog.resolve_or_raise``
-        mirror (this runs in spawned planner processes; parity pinned
-        by ``tests/test_cow_batch_source.py``). ``catalogDir`` option
-        overrides the engine-default ``<cwd>/spark-warehouse/
-        _cow_catalog`` location."""
-        name = options.get("table")
-        if name:
-            name = name.strip().strip("`\"").lower()
-            cat = _local(
-                options.get("catalogdir")
-                or options.get("catalogDir")
-                or _os.path.join(_os.getcwd(), "spark-warehouse", "_cow_catalog")
-            )
-            entry = _os.path.join(cat, f"{name}.json")
-            if not _os.path.isfile(entry):
-                known = (
-                    sorted(f[:-5] for f in _os.listdir(cat) if f.endswith(".json"))
-                    if _os.path.isdir(cat)
-                    else []
-                )
-                raise ValueError(
-                    f"unknown table name {name!r} — registered tables: "
-                    f"{known if known else '(none)'}"
-                )
-            with open(entry) as fh:
-                return _local(_json.loads(fh.read())["path"])
-        return options.get("tablepath") or options.get("tablePath")
+class CowCdcStreamReader(DataSourceStreamReader):
+    def __init__(self, schema, options):
+        options = CaseInsensitiveDict(options)
+        self.table_path = _local.table_path(options, "cowcdc")
+        # table columns only (schema() appended the two CDC cols)
+        self.col_names = [f.name for f in schema.fields[:-2]]
+        self.col_types = {f.name: f.dataType.simpleString() for f in schema.fields[:-2]}
+        snaps = _local.snapshots(self.table_path)
+        if not snaps:
+            raise ValueError(f"no COW snapshots at {self.table_path}")
+        start = options.get("startingSnapshot")
+        ts = options.get("startingTimestamp")
+        if start is not None and ts is not None:
+            raise ValueError("pass startingSnapshot OR startingTimestamp, not both")
+        if ts is not None:
+            # Delta CDF parity (INCLUSIVE): the first snapshot committed
+            # at-or-after the instant is the first one streamed, so the
+            # base is the latest snapshot committed STRICTLY BEFORE it;
+            # an instant before the first commit replays everything
+            want = _local.instant(ts)
+            older = [n for n in snaps if _local.committed_at(self.table_path, n) < want]
+            self.start_snapshot = older[-1] if older else 0
+        elif start is not None:
+            self.start_snapshot = _local.snapshot_ref(self.table_path, snaps, start)
+        else:
+            self.start_snapshot = snaps[-1]
 
-    def _load_manifest(table_path, n):
-        mpath = _os.path.join(_local(table_path), "_manifests", f"manifest-{n:08d}.json")
-        with open(mpath) as fh:
-            m = _json.load(fh)
-        if "file_shards" in m:  # sharded large-table file list
-            files = []
-            for name in m["file_shards"]:
-                with open(_os.path.join(_local(table_path), "_manifests", name)) as fh:
-                    files += _json.load(fh)
-            m["files"] = files
-        return m
+    def initialOffset(self):
+        return {"snapshot": self.start_snapshot}
 
-    def _snapshots(table_path):
-        mdir = _os.path.join(_local(table_path), "_manifests")
-        if not _os.path.isdir(mdir):
-            return []
+    def latestOffset(self):
+        snaps = _local.snapshots(self.table_path)
+        return {"snapshot": snaps[-1] if snaps else self.start_snapshot}
+
+    def partitions(self, start, end):
+        lo, hi = start["snapshot"], end["snapshot"]
+
+        def _eff(f):
+            # CDC identity = (file, deletion vector): a merge-on-read
+            # commit keeps the file but swaps its dv reference, which
+            # must stream as removed(old live rows) + added(new live
+            # rows) — mirroring cowtable.changes()
+            return (f["name"], (f.get("dv") or {}).get("name"))
+
+        # startingSnapshot=0 replays ALL history: snapshot ids start
+        # at 1, so the pre-create state is a synthesized empty
+        # manifest and commit 1 streams as pure inserts
+        prev = {"files": []} if lo == 0 else _local.load_manifest(self.table_path, lo)
         out = []
-        for name in _os.listdir(mdir):
-            mm = _MANIFEST_RE.match(name)
-            if mm:
-                out.append(int(mm.group(1)))
-        return sorted(out)
-
-    class CommitPartition(InputPartition):
-        def __init__(
-            self, data_dir, dv_dir, snapshot, removed, added, col_names, col_types, pmap
-        ):
-            self.data_dir = data_dir
-            self.dv_dir = dv_dir
-            self.snapshot = snapshot
-            self.removed = removed  # [(file name, dv name | None), ...]
-            self.added = added
-            self.col_names = col_names
-            self.col_types = col_types
-            self.pmap = pmap  # logical -> physical (renamed tables)
-
-    class CowCdcStreamReader(DataSourceStreamReader):
-        def __init__(self, schema, options):
-            self.table_path = _table_path_opt(options)
-            if not self.table_path:
-                raise ValueError("cowcdc requires the 'tablePath' option")
-            # table columns only (schema() appended the two CDC cols)
-            self.col_names = [f.name for f in schema.fields[:-2]]
-            self.col_types = {
-                f.name: f.dataType.simpleString() for f in schema.fields[:-2]
-            }
-            snaps = _snapshots(self.table_path)
-            if not snaps:
-                raise ValueError(f"no COW snapshots at {self.table_path}")
-            start = options.get("startingsnapshot") or options.get("startingSnapshot")
-            ts = options.get("startingtimestamp") or options.get(
-                "startingTimestamp"
-            )
-            if start is not None and ts is not None:
-                raise ValueError(
-                    "pass startingSnapshot OR startingTimestamp, not both"
+        for n in range(lo + 1, hi + 1):
+            m = _local.load_manifest(self.table_path, n)
+            pf = {_eff(f) for f in prev["files"]}
+            cf = {_eff(f) for f in m["files"]}
+            out.append(
+                CommitPartition(
+                    self.table_path,
+                    n,
+                    sorted(pf - cf),
+                    sorted(cf - pf),
+                    self.col_names,
+                    self.col_types,
+                    m.get("physical_names") or {},
                 )
-            if ts is not None:
-                # Delta CDF parity (INCLUSIVE): the first snapshot
-                # committed at-or-after the instant is the first one
-                # streamed, so the base is the latest snapshot
-                # committed STRICTLY BEFORE it — a commit stamped
-                # exactly at the requested timestamp streams as the
-                # first batch (r12 review fix: `<=` excluded it)
-                import datetime as _dt
-
-                want = _dt.datetime.fromisoformat(ts)
-                if want.tzinfo is None:
-                    want = want.replace(tzinfo=_dt.timezone.utc)
-                best = None
-                for n in snaps:
-                    m_ = _load_manifest(self.table_path, n)
-                    stamp = m_.get("committed_at")
-                    if stamp is not None:
-                        at = _dt.datetime.fromisoformat(stamp)
-                    else:  # legacy manifest: file mtime
-                        at = _dt.datetime.fromtimestamp(
-                            _os.path.getmtime(
-                                _os.path.join(
-                                    _local(self.table_path),
-                                    "_manifests",
-                                    f"manifest-{n:08d}.json",
-                                )
-                            ),
-                            tz=_dt.timezone.utc,
-                        )
-                    if at < want:
-                        best = n
-                if best is None:
-                    best = 0  # precedes the first commit: replay all
-                self.start_snapshot = best
-            elif start is not None and not str(start).isdigit():
-                # r11 snapshot tags: a non-numeric start is a tag name
-                # resolved through the HEAD manifest's map
-                tags = _load_manifest(self.table_path, snaps[-1]).get(
-                    "tags"
-                ) or {}
-                if str(start) not in tags:
-                    raise ValueError(
-                        f"unknown tag {start!r} at {self.table_path}; "
-                        f"known tags: {sorted(tags) or '(none)'}"
-                    )
-                self.start_snapshot = int(tags[str(start)])
-            else:
-                self.start_snapshot = (
-                    int(start) if start is not None else snaps[-1]
-                )
-
-        def initialOffset(self):
-            return {"snapshot": self.start_snapshot}
-
-        def latestOffset(self):
-            snaps = _snapshots(self.table_path)
-            return {"snapshot": snaps[-1] if snaps else self.start_snapshot}
-
-        def partitions(self, start, end):
-            lo, hi = start["snapshot"], end["snapshot"]
-            data_dir = _os.path.join(_local(self.table_path), "data")
-            dv_dir = _os.path.join(_local(self.table_path), "_dv")
-            out = []
-
-            def _eff(f):
-                # CDC identity = (file, deletion vector): a merge-on-read
-                # commit keeps the file but swaps its dv reference, which
-                # must stream as removed(old live rows) + added(new live
-                # rows) — mirroring cowtable.changes()
-                return (f["name"], (f.get("dv") or {}).get("name"))
-
-            # startingSnapshot=0 replays ALL history: snapshot ids start
-            # at 1, so the pre-create state is a synthesized empty
-            # manifest and commit 1 streams as pure inserts
-            prev = {"files": []} if lo == 0 else _load_manifest(self.table_path, lo)
-            for n in range(lo + 1, hi + 1):
-                m = _load_manifest(self.table_path, n)
-                pf = {_eff(f) for f in prev["files"]}
-                cf = {_eff(f) for f in m["files"]}
-                out.append(
-                    CommitPartition(
-                        data_dir,
-                        dv_dir,
-                        n,
-                        sorted(pf - cf),
-                        sorted(cf - pf),
-                        self.col_names,
-                        self.col_types,
-                        m.get("physical_names") or {},
-                    )
-                )
-                prev = m
-            return out
-
-        def read(self, partition):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            from urllib.parse import unquote as _unq
-
-            def _part_vals(name):
-                # Hive-style col=value/ directory segments of the file's
-                # relative path — the writer strips these columns from
-                # the file bytes, so the CDC reader re-injects them here
-                # (typed), exactly like the batch read's basePath does
-                out = {}
-                for seg in name.split("/")[:-1]:
-                    c, _, v = seg.partition("=")
-                    if not _ or c not in partition.col_names:
-                        continue
-                    v = _unq(v)
-                    if v == "__HIVE_DEFAULT_PARTITION__":
-                        out[c] = None
-                        continue
-                    t = partition.col_types.get(c, "")
-                    if t in ("int", "bigint", "smallint", "tinyint"):
-                        out[c] = int(v)
-                    elif t in ("float", "double"):
-                        out[c] = float(v)
-                    elif t == "date":
-                        # the batch path types date partitions; leaving
-                        # the raw directory string here would mismatch
-                        # the DateType schema field at row conversion
-                        out[c] = _dt.date.fromisoformat(v)
-                    elif t == "timestamp":
-                        out[c] = _dt.datetime.fromisoformat(v)
-                    elif t == "boolean":
-                        out[c] = v.lower() == "true"
-                    else:
-                        out[c] = v
-                return out
-
-            def _frame(entries):
-                import numpy as np
-                import pyarrow.compute as pc
-
-                frames = []
-                for name, dv_name in entries:
-                    t = pq.read_table(_os.path.join(partition.data_dir, name))
-                    pdf = t.to_pandas()
-                    if dv_name is not None:
-                        # merge-on-read entry: mask the dv's positions
-                        # for THIS file (row position = read order)
-                        base = name.rsplit("/", 1)[-1]
-                        dv = pq.read_table(
-                            _os.path.join(partition.dv_dir, dv_name),
-                            columns=["file", "pos"],
-                        )
-                        pos = dv.filter(pc.equal(dv["file"], base))["pos"].to_numpy()
-                        if len(pos):
-                            keep = np.ones(len(pdf), dtype=bool)
-                            keep[pos.astype(int)] = False
-                            pdf = pdf[keep].reset_index(drop=True)
-                    if partition.pmap:
-                        # column mapping: files hold PHYSICAL names
-                        pdf = pdf.rename(
-                            columns={p: l for l, p in partition.pmap.items()}
-                        )
-                    pvals = _part_vals(name)
-                    for c in partition.col_names:
-                        if c in pvals:
-                            pdf[c] = pvals[c]
-                        elif c not in pdf.columns:
-                            # schema-evolved older file: column reads NULL
-                            pdf[c] = None
-                    frames.append(pdf[partition.col_names])
-                if not frames:
-                    return pd.DataFrame(columns=partition.col_names)
-                return pd.concat(frames, ignore_index=True)
-
-            def _keys(pdf):
-                for tup in pdf.itertuples(index=False, name=None):
-                    yield tuple(
-                        None
-                        if v is None or (isinstance(v, float) and v != v) or v is pd.NaT
-                        else (v.to_pydatetime() if isinstance(v, pd.Timestamp) else
-                              v.item() if hasattr(v, "item") else v)
-                        for v in tup
-                    )
-
-            counts: dict[tuple, int] = {}
-            for key in _keys(_frame(partition.added)):
-                counts[key] = counts.get(key, 0) + 1
-            for key in _keys(_frame(partition.removed)):
-                counts[key] = counts.get(key, 0) - 1
-            for key, net in counts.items():
-                if net == 0:
-                    continue  # carried-over row of a rewrite: not a change
-                change = "insert" if net > 0 else "delete"
-                for _ in range(abs(net)):
-                    yield key + (change, partition.snapshot)
-
-        def commit(self, end):
-            pass  # Spark's checkpoint owns the offsets; nothing to persist
-
-    class CowCdcDataSource(DataSource):
-        """``format("cowcdc")`` after ``register_cow_cdc(spark)``."""
-
-        @classmethod
-        def name(cls):
-            return "cowcdc"
-
-        def schema(self):
-            table_path = _table_path_opt(self.options)
-            if not table_path:
-                raise ValueError("cowcdc requires the 'tablePath' option")
-            snaps = _snapshots(table_path)
-            if not snaps:
-                raise ValueError(f"no COW snapshots at {table_path}")
-            from pyspark.sql.types import (
-                LongType,
-                StringType,
-                StructField,
-                StructType,
             )
+            prev = m
+        return out
 
-            m = _load_manifest(table_path, snaps[-1])
-            base = StructType.fromJson(_json.loads(m["schema"]))
-            return StructType(
-                list(base.fields)
-                + [
-                    StructField("_change_type", StringType()),
-                    StructField("_commit_snapshot", LongType()),
-                ]
-            )
+    def read(self, partition):
+        p = partition
 
-        def streamReader(self, schema):
-            return CowCdcStreamReader(schema, self.options)
+        def _keys(files):
+            for name, dv_name in files:
+                pdf = _local.read_frame(
+                    p.table_path, name, dv_name, p.col_names, p.col_types, p.pmap
+                )
+                yield from _local.py_rows(pdf)
 
-    return CowCdcDataSource
+        counts: dict[tuple, int] = {}
+        for key in _keys(p.added):
+            counts[key] = counts.get(key, 0) + 1
+        for key in _keys(p.removed):
+            counts[key] = counts.get(key, 0) - 1
+        for key, net in counts.items():
+            if net == 0:
+                continue  # carried-over row of a rewrite: not a change
+            change = "insert" if net > 0 else "delete"
+            for _ in range(abs(net)):
+                yield key + (change, p.snapshot)
+
+    def commit(self, end):
+        pass  # Spark's checkpoint owns the offsets; nothing to persist
 
 
-CowCdcDataSource = _build_stream_source_class()
+class CowCdcDataSource(DataSource):
+    """``format("cowcdc")`` after ``register_cow_cdc(spark)``."""
+
+    @classmethod
+    def name(cls):
+        return "cowcdc"
+
+    def schema(self):
+        import json
+
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        table_path = _local.table_path(self.options, "cowcdc")
+        snaps = _local.snapshots(table_path)
+        if not snaps:
+            raise ValueError(f"no COW snapshots at {table_path}")
+        m = _local.load_manifest(table_path, snaps[-1], expand=False)
+        base = StructType.fromJson(json.loads(m["schema"]))
+        return StructType(
+            list(base.fields)
+            + [
+                StructField("_change_type", StringType()),
+                StructField("_commit_snapshot", LongType()),
+            ]
+        )
+
+    def streamReader(self, schema):
+        return CowCdcStreamReader(schema, self.options)
 
 
 def register_cow_cdc(spark) -> None:

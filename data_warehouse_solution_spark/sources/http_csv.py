@@ -28,129 +28,122 @@ All values surface as strings in that mode; supply a typed schema for
 real types (the reference's SQLite → Dremio type map is the
 ``ingest.canonicalize_schema`` cast table here).
 
-Serialization: every class here is defined inside a factory function,
-so cloudpickle ships them BY VALUE to executor workers — the package
-itself never needs to be importable on the executors' Python path
-(the same closure rule every UDF in this repo follows).
+The reader runs in Spark's Python workers, which import this module
+like any other: ``register_once`` ships the package to them with
+``addPyFile``.
 """
 
 from __future__ import annotations
 
 
-def _build_source_class():
-    """Factory: returns the DataSource class with all dependencies
-    closed over by value (see module docstring)."""
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    retries_default = 3
-    delay_default = 2.0
 
-    def fetch_with_retry(url, retries=retries_default, delay=delay_default):
-        import time
-        import urllib.request
+def fetch_with_retry(url, retries=3, delay=2.0):
+    import time
+    import urllib.request
 
-        last = None
-        for attempt in range(1, retries + 1):
+    last = None
+    for attempt in range(1, retries + 1):
+        try:
+            with urllib.request.urlopen(url) as resp:  # noqa: S310
+                return resp.read()
+        except Exception as err:  # noqa: BLE001 (reference retries any failure)
+            last = err
+            if attempt < retries:
+                time.sleep(delay)
+    raise RuntimeError(f"failed to fetch {url} after {retries} attempts") from last
+
+
+def parse_urls(options):
+    raw = options.get("urls", "")
+    return [u.strip() for u in raw.replace(",", "\n").splitlines() if u.strip()]
+
+
+class UrlPartition(InputPartition):
+    def __init__(self, url):
+        self.url = url
+
+
+class HttpCsvReader(DataSourceReader):
+    def __init__(self, schema, options):
+        self.urls = parse_urls(options)
+        if not self.urls:
+            raise ValueError(
+                "httpcsv requires the 'urls' option (newline- or comma-separated)"
+            )
+        self.schema_names = [f.name for f in schema.fields]
+        self.type_names = [f.dataType.simpleString() for f in schema.fields]
+
+    def partitions(self):
+        return [UrlPartition(u) for u in self.urls]
+
+    def read(self, partition):
+        import csv
+        import io
+
+        data = fetch_with_retry(partition.url)
+        text = io.TextIOWrapper(io.BytesIO(data), encoding="utf-8", newline="")
+        rows = csv.reader(text)
+        header = next(rows, None)
+        if header is None:
+            return
+        # map file columns to schema columns by name when the
+        # header matches, else positionally (reference: pandas
+        # assigns by position)
+        if set(self.schema_names) <= set(header):
+            idx = [header.index(c) for c in self.schema_names]
+        else:
+            idx = list(range(len(self.schema_names)))
+
+        def convert(val, type_name):
+            if val == "" or val is None:
+                return None
             try:
-                with urllib.request.urlopen(url) as resp:  # noqa: S310
-                    return resp.read()
-            except Exception as err:  # noqa: BLE001 (reference retries any failure)
-                last = err
-                if attempt < retries:
-                    time.sleep(delay)
-        raise RuntimeError(f"failed to fetch {url} after {retries} attempts") from last
+                if type_name in ("bigint", "int", "smallint", "tinyint"):
+                    return int(val)
+                if type_name in ("double", "float"):
+                    return float(val)
+                if type_name == "boolean":
+                    return val.strip().lower() in ("1", "true", "t", "yes")
+                return val
+            except ValueError:
+                return None
 
-    def parse_urls(options):
-        raw = options.get("urls", "")
-        return [u.strip() for u in raw.replace(",", "\n").splitlines() if u.strip()]
-
-    class UrlPartition(InputPartition):
-        def __init__(self, url):
-            self.url = url
-
-    class HttpCsvReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.urls = parse_urls(options)
-            if not self.urls:
-                raise ValueError(
-                    "httpcsv requires the 'urls' option (newline- or comma-separated)"
-                )
-            self.schema_names = [f.name for f in schema.fields]
-            self.type_names = [f.dataType.simpleString() for f in schema.fields]
-
-        def partitions(self):
-            return [UrlPartition(u) for u in self.urls]
-
-        def read(self, partition):
-            import csv
-            import io
-
-            data = fetch_with_retry(partition.url)
-            text = io.TextIOWrapper(io.BytesIO(data), encoding="utf-8", newline="")
-            rows = csv.reader(text)
-            header = next(rows, None)
-            if header is None:
-                return
-            # map file columns to schema columns by name when the
-            # header matches, else positionally (reference: pandas
-            # assigns by position)
-            if set(self.schema_names) <= set(header):
-                idx = [header.index(c) for c in self.schema_names]
-            else:
-                idx = list(range(len(self.schema_names)))
-
-            def convert(val, type_name):
-                if val == "" or val is None:
-                    return None
-                try:
-                    if type_name in ("bigint", "int", "smallint", "tinyint"):
-                        return int(val)
-                    if type_name in ("double", "float"):
-                        return float(val)
-                    if type_name == "boolean":
-                        return val.strip().lower() in ("1", "true", "t", "yes")
-                    return val
-                except ValueError:
-                    return None
-
-            for row in rows:
-                if not row:
-                    continue
-                yield tuple(
-                    convert(row[i] if i < len(row) else None, t)
-                    for i, t in zip(idx, self.type_names)
-                )
-
-    class HttpCsvDataSource(DataSource):
-        """CSV-over-URL source; ``format("httpcsv")`` after
-        ``register_http_csv(spark)``."""
-
-        @classmethod
-        def name(cls):
-            return "httpcsv"
-
-        def schema(self):
-            # no user schema: infer string columns from the first
-            # URL's header (one small driver-side fetch)
-            import csv
-            import io
-
-            urls = parse_urls(self.options)
-            if not urls:
-                raise ValueError("httpcsv requires the 'urls' option")
-            data = fetch_with_retry(urls[0])
-            header = next(csv.reader(io.StringIO(data.decode("utf-8"))), None)
-            if not header:
-                raise ValueError(f"no header row in {urls[0]}")
-            return ", ".join(f"`{c}` string" for c in header)
-
-        def reader(self, schema):
-            return HttpCsvReader(schema, self.options)
-
-    return HttpCsvDataSource
+        for row in rows:
+            if not row:
+                continue
+            yield tuple(
+                convert(row[i] if i < len(row) else None, t)
+                for i, t in zip(idx, self.type_names)
+            )
 
 
-HttpCsvDataSource = _build_source_class()
+class HttpCsvDataSource(DataSource):
+    """CSV-over-URL source; ``format("httpcsv")`` after
+    ``register_http_csv(spark)``."""
+
+    @classmethod
+    def name(cls):
+        return "httpcsv"
+
+    def schema(self):
+        # no user schema: infer string columns from the first
+        # URL's header (one small driver-side fetch)
+        import csv
+        import io
+
+        urls = parse_urls(self.options)
+        if not urls:
+            raise ValueError("httpcsv requires the 'urls' option")
+        data = fetch_with_retry(urls[0])
+        header = next(csv.reader(io.StringIO(data.decode("utf-8"))), None)
+        if not header:
+            raise ValueError(f"no header row in {urls[0]}")
+        return ", ".join(f"`{c}` string" for c in header)
+
+    def reader(self, schema):
+        return HttpCsvReader(schema, self.options)
 
 
 def register_http_csv(spark) -> None:

@@ -77,10 +77,10 @@ def test_batch_source_schema_evolution_and_partitions(spark, tmp_path):
 
 
 def _reader_for(spark, path, filters):
-    from data_warehouse_solution_spark.sources.cow_batch import CowBatchDataSource
+    from data_warehouse_solution_spark.sources.cow_batch import CowBatchReader
 
     schema = cow.read(spark, path).schema
-    rdr = CowBatchDataSource._reader_cls(schema, {"tablePath": path})
+    rdr = CowBatchReader(schema, {"tablePath": path})
     residual = list(rdr.pushFilters(filters))
     return rdr, residual
 
@@ -147,74 +147,11 @@ def test_pushdown_is_sound_after_rename_and_unknown_types(spark, tmp_path):
     assert len(rdr.partitions()) == total
 
 
-def test_pushdown_matcher_pinned_against_cowtable(spark):
-    """Randomized agreement: the DataSource's self-contained matcher
-    must decide identically to cowtable._file_may_match on arbitrary
-    entries and conjuncts (including bloom probes, which exercise the
-    duplicated XXH64)."""
-    import base64
-    import random
-
-    from data_warehouse_solution_spark.cowtable import (
-        _bloom_positions,
-        _file_may_match,
-    )
-    from data_warehouse_solution_spark.sources.cow_batch import CowBatchDataSource
-
-    rng = random.Random(77)
-    m_bits, k_hash = 256, 3
-
-    def bloom_of(values):
-        bitmap = bytearray(m_bits // 8)
-        for v in values:
-            for p in _bloom_positions(str(v), m_bits, k_hash):
-                bitmap[p >> 3] |= 1 << (p & 7)
-        return {"b64": base64.b64encode(bytes(bitmap)).decode(), "m": m_bits, "k": k_hash}
-
-    types = {"a": "bigint", "s": "string"}
-    for trial in range(300):
-        lo = rng.randrange(-50, 50)
-        hi = lo + rng.randrange(0, 60)
-        svals = rng.sample(["x", "y", "z", "w", "q"], rng.randrange(1, 4))
-        rows = rng.randrange(1, 100)
-        entry = {
-            "rows": rows,
-            "stats": {"a": [lo, hi], "s": [min(svals), max(svals)]},
-            "nulls": {"a": rng.choice([0, rows // 2, rows]), "s": 0},
-        }
-        if rng.random() < 0.6:
-            entry["blooms"] = {
-                "a": bloom_of(range(lo, hi + 1)),
-                "s": bloom_of(svals),
-            }
-        conjs = []
-        for _ in range(rng.randrange(1, 4)):
-            col = rng.choice(["a", "s"])
-            if col == "a":
-                op = rng.choice(["=", "<", "<=", ">", ">=", "in", "isnull", "notnull"])
-                val = (
-                    [rng.randrange(-60, 120) for _ in range(2)]
-                    if op == "in"
-                    else None if op in ("isnull", "notnull") else rng.randrange(-60, 120)
-                )
-            else:
-                op = rng.choice(["=", "in"])
-                val = (
-                    rng.sample(["x", "y", "z", "nope", "q"], 2)
-                    if op == "in"
-                    else rng.choice(["x", "y", "z", "nope"])
-                )
-            conjs.append((col, op, val))
-        want = _file_may_match(entry, conjs, types)
-        got = CowBatchDataSource._entry_may_match(entry, conjs, types)
-        assert got == want, (trial, entry, conjs)
-
-
 def test_reader_bucket_pruning_parity_and_correctness(spark, tmp_path):
-    """The DSv2 reader mirrors the engine's bucket pruning: a point
+    """The DSv2 reader applies the engine's bucket pruning: a point
     SELECT over a bucketed table emits only the key's bucket's
-    partitions (local Murmur3, parity-pinned vs the engine's), and
-    the residual filter keeps results exact."""
+    partitions (local Murmur3), and the residual filter keeps results
+    exact."""
     import data_warehouse_solution_spark.cowtable as cow
     from data_warehouse_solution_spark.sources.cow_batch import register_cow_batch
 
@@ -231,9 +168,9 @@ def test_reader_bucket_pruning_parity_and_correctness(spark, tmp_path):
     got = df.collect()
     assert [tuple(r) for r in got] == [(123, 246)]
     # partition count: exactly the one bucket's file(s)
-    from data_warehouse_solution_spark.sources.cow_batch import CowBatchDataSource
+    from data_warehouse_solution_spark.sources.cow_batch import CowBatchReader
 
-    rd = CowBatchDataSource({"tablePath": p})._reader_cls(
+    rd = CowBatchReader(
         spark.read.format("cow").option("tablePath", p).load().schema,
         {"tablepath": p},
     )
@@ -257,8 +194,8 @@ def test_name_addressed_sources_all_routes(spark, tmp_path):
     reader/writer and the cowcdc/cowsink streams resolves a
     catalog-registered name (with ``catalogDir`` pointing at the
     session's overridden catalog) — no route mentions a path; unknown
-    names raise with the registered-table list; the sources' mirror
-    resolver stays pinned against ``catalog.resolve``."""
+    names raise with the registered-table list; the sources resolve
+    through ``catalog.lookup``, as ``catalog.resolve_or_raise`` does."""
     import uuid
 
     from data_warehouse_solution_spark import catalog
@@ -279,7 +216,7 @@ def test_name_addressed_sources_all_routes(spark, tmp_path):
         register_cow_cdc(spark)
         register_cow_sink(spark)
 
-        # mirror parity: the source resolves exactly what catalog.resolve says
+        # the sources resolve exactly what catalog.resolve says
         assert catalog.resolve(spark, name) == p
 
         # route 1: batch read by name
@@ -362,3 +299,77 @@ def test_name_addressed_sources_all_routes(spark, tmp_path):
             spark.conf.unset("spark.dws.cow.catalogDir")
         else:
             spark.conf.set("spark.dws.cow.catalogDir", old)
+
+
+def test_register_reasserts_filter_pushdown_conf(spark, tmp_path):
+    """Only the registration is memoized: every ``register_cow_batch``
+    call re-enables ``spark.sql.python.filterPushdown.enabled``, without
+    which Spark refuses the reader outright."""
+    path = str(tmp_path / "conf")
+    cow.create(spark, path, spark.range(20).selectExpr("id AS k").repartitionByRange(4, "k"))
+    register_cow_batch(spark)
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    register_cow_batch(spark)
+    got = sorted(r.k for r in _read(spark, path).filter("k < 3").collect())
+    assert got == [0, 1, 2]
+
+
+_FOREIGN_CWD_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.sql.session.timeZone", "UTC")
+         .getOrCreate())
+import data_warehouse_solution_spark.cowtable as cow
+from data_warehouse_solution_spark.sources.cow_batch import register_cow_batch
+
+path = {path!r}
+cow.create(spark, path, spark.range(40).selectExpr("id AS k", "CAST(id % 3 AS string) AS v")
+           .repartitionByRange(4, "k"))
+register_cow_batch(spark)
+(spark.range(40, 50).selectExpr("id AS k", "CAST(id % 3 AS string) AS v")
+ .coalesce(1).write.format("cow").option("tablePath", path).mode("append").save())
+df = spark.read.format("cow").option("tablePath", path).load().filter("k < 10 OR k >= 45")
+got = sorted(map(tuple, df.collect()))
+want = sorted(map(tuple, cow.read(spark, path).filter("k < 10 OR k >= 45").collect()))
+files = len(cow._load_manifest(spark, path, cow.current_snapshot(spark, path))["files"])
+pruned = spark.read.format("cow").option("tablePath", path).load().filter("k < 10")
+assert files == 5 and pruned.rdd.getNumPartitions() == 1, (files, pruned.rdd.getNumPartitions())
+assert got == want and len(got) == 15, (got, want)
+print("FOREIGN-CWD-OK")
+spark.stop()
+"""
+
+
+def test_sources_work_when_workers_cannot_import_the_package(tmp_path):
+    """From a foreign working directory, with the package on the
+    driver's ``sys.path`` only, ``format("cow")`` writes and pruned reads
+    work: ``register_once`` ships the package to the Python workers,
+    which unpickle the source classes by reference."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p
+        for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    cwd = tmp_path / "elsewhere"
+    cwd.mkdir()
+    script = _FOREIGN_CWD_SCRIPT.format(repo=repo, path=str(tmp_path / "t"))
+    res = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=cwd,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0 and "FOREIGN-CWD-OK" in res.stdout, res.stderr[-4000:]

@@ -462,6 +462,8 @@ def test_python_murmur3_matches_spark_hash(spark):
     the multi-column chained fold."""
     import datetime as dt
 
+    from data_warehouse_solution_spark.hashing import murmur3_literal
+
     rows = spark.createDataFrame(
         [
             (i, -i * 7, f"s{i}·", i * 1234567890123, dt.date(2024, 1, 1 + i % 28))
@@ -480,17 +482,17 @@ def test_python_murmur3_matches_spark_hash(spark):
         return h - (1 << 32) if h >= (1 << 31) else h
 
     for r in got:
-        assert signed(cow._spark_hash_literal(r["a"], "int", 42)) == r["ha"]
-        assert signed(cow._spark_hash_literal(r["b"], "int", 42)) == r["hb"]
-        assert signed(cow._spark_hash_literal(r["s"], "string", 42)) == r["hs"]
-        assert signed(cow._spark_hash_literal(r["l"], "bigint", 42)) == r["hl"]
+        assert signed(murmur3_literal(r["a"], "int", 42)) == r["ha"]
+        assert signed(murmur3_literal(r["b"], "int", 42)) == r["hb"]
+        assert signed(murmur3_literal(r["s"], "string", 42)) == r["hs"]
+        assert signed(murmur3_literal(r["l"], "bigint", 42)) == r["hl"]
         assert (
-            signed(cow._spark_hash_literal(r["d"].isoformat(), "date", 42))
+            signed(murmur3_literal(r["d"].isoformat(), "date", 42))
             == r["hd"]
         )
-        h = cow._spark_hash_literal(r["a"], "int", 42)
-        h = cow._spark_hash_literal(r["s"], "string", h)
-        h = cow._spark_hash_literal(r["l"], "bigint", h)
+        h = murmur3_literal(r["a"], "int", 42)
+        h = murmur3_literal(r["s"], "string", h)
+        h = murmur3_literal(r["l"], "bigint", h)
         assert signed(h) == r["hchain"]
 
 

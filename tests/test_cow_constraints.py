@@ -122,6 +122,35 @@ def test_bad_constraint_expression_leaves_no_orphans(spark):
     assert not os.path.isdir(data_dir) or os.listdir(data_dir) == []
 
 
+def test_failed_stats_pass_leaves_no_orphans_without_constraints(spark, monkeypatch):
+    """Any failure of staging's stats/bloom pass deletes the staged
+    files, on an unconstrained table too: no manifest references them,
+    so they would otherwise orphan until a vacuum."""
+    path = _fresh("statsfail")
+    cow.create(spark, path, _df(spark, GOOD), bloom_columns=["s"])
+    data_dir = os.path.join(path, "data")
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), data_dir)
+            for d, _, fs in os.walk(data_dir)
+            for f in fs
+            if f.endswith(".parquet")
+        }
+
+    before = files()
+
+    def boom(*a, **k):
+        raise RuntimeError("bloom job failed")
+
+    monkeypatch.setattr(cow, "_spark_bloom_positions", boom)
+    with pytest.raises(RuntimeError, match="bloom job failed"):
+        cow.append(spark, path, _df(spark, [(7, 70.0, "g")]))
+    m = cow._load_manifest(spark, path, cow.current_snapshot(spark, path))
+    assert files() == before == {f["name"] for f in m["files"]}
+    assert not [n for n in os.listdir(path) if n.startswith("_staging-")]
+
+
 def test_drop_column_constraint_check_is_semantic(spark, tmp_path):
     """String literals containing a column's name must not block the
     drop; backticked identifiers must. (The r5 regex check got both

@@ -15,10 +15,8 @@ from .conftest import hyp_examples
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from data_warehouse_solution_spark.cowtable import (
-    _bloom_positions,
-    stats_candidate_files,
-)
+from data_warehouse_solution_spark.cowtable import stats_candidate_files
+from data_warehouse_solution_spark.hashing import bloom_positions
 
 _OPS = ["=", "<", "<=", ">", ">="]
 
@@ -35,7 +33,7 @@ def _mk_bloom(chunk: list[dict], col: str) -> dict:
 
     bitmap = bytearray(_BLOOM_M >> 3)
     for r in chunk:
-        for p in _bloom_positions(str(r[col]), _BLOOM_M, _BLOOM_K):
+        for p in bloom_positions(str(r[col]), _BLOOM_M, _BLOOM_K):
             bitmap[p >> 3] |= 1 << (p & 7)
     return {"m": _BLOOM_M, "k": _BLOOM_K, "b64": base64.b64encode(bytes(bitmap)).decode()}
 

@@ -600,6 +600,8 @@ def test_xxh64_python_parity_with_spark(spark):
     positions the JVM staging aggregate produced, or bloom pruning
     would be unsound. Covers every XXH64 length regime (empty, <4,
     <8, 8..31 with 4-byte tail, >=32 stripes) plus multi-byte UTF-8."""
+    from data_warehouse_solution_spark.hashing import bloom_positions
+
     vals = [
         "", "a", "ab", "abc", "abcd", "hello!!", "x" * 8, "y" * 15,
         "z" * 31, "w" * 32, "v" * 33, "u" * 100, "é-字-𐍈", "123", "-45",
@@ -614,7 +616,7 @@ def test_xxh64_python_parity_with_spark(spark):
         for i in range(cow.BLOOM_K)
     ]
     for row in df.select("s", *exprs).collect():
-        expect = cow._bloom_positions(row["s"], cow.BLOOM_M_BITS, cow.BLOOM_K)
+        expect = bloom_positions(row["s"], cow.BLOOM_M_BITS, cow.BLOOM_K)
         got = [row[f"h{i}"] for i in range(cow.BLOOM_K)]
         assert got == expect, row["s"]
 
@@ -1010,3 +1012,33 @@ def test_compact_where_materializes_dvs_only_in_scope(spark, tmp_path):
     assert any(f.get("dv") for f in m["files"] if "ds=b" in f["name"])
     got = sorted(r["k"] for r in cow.read(spark, p).collect())
     assert got == list(range(2, 10))
+
+
+def test_overlap_jobs_runs_serially_on_caller_when_pin_fails():
+    """No active-session pin means Data Source lookups could fail on
+    pool threads: the thunks must then run in order on the caller's
+    thread, never concurrently."""
+    import threading
+
+    from data_warehouse_solution_spark.plans import overlap_jobs
+
+    class _NoClassicJvm:
+        def __getattr__(self, name):
+            raise RuntimeError("no classic SparkSession")
+
+    class _Session:
+        _jvm = _NoClassicJvm()
+        _jsparkSession = None
+
+    calls = []
+
+    def thunk(i):
+        def run():
+            calls.append((i, threading.get_ident()))
+            return i * 10
+
+        return run
+
+    assert overlap_jobs(_Session(), thunk(1), thunk(2), thunk(3)) == [10, 20, 30]
+    caller = threading.get_ident()
+    assert calls == [(1, caller), (2, caller), (3, caller)]

@@ -108,7 +108,7 @@ def test_dsv2_reader_prunes_on_timestamp_filter(spark, tmp_path):
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
     from data_warehouse_solution_spark.sources.cow_batch import (
-        CowBatchDataSource,
+        CowBatchReader,
         register_cow_batch,
     )
 
@@ -116,9 +116,9 @@ def test_dsv2_reader_prunes_on_timestamp_filter(spark, tmp_path):
     _ts_table(spark, path)
     register_cow_batch(spark)
     schema = cow.read(spark, path).schema
-    rdr = CowBatchDataSource._reader_cls(schema, {"tablePath": path})
+    rdr = CowBatchReader(schema, {"tablePath": path})
     total = len(rdr.partitions())
-    rdr2 = CowBatchDataSource._reader_cls(schema, {"tablePath": path})
+    rdr2 = CowBatchReader(schema, {"tablePath": path})
     lo = datetime.datetime(2024, 1, 20)
     hi = datetime.datetime(2024, 1, 22)
     residual = list(
@@ -169,7 +169,7 @@ def test_generated_partition_prunes_via_base_column_stats(spark, tmp_path):
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
     from data_warehouse_solution_spark.sources.cow_batch import (
-        CowBatchDataSource,
+        CowBatchReader,
         register_cow_batch,
     )
     import data_warehouse_solution_spark.cowtable as cow
@@ -189,9 +189,9 @@ def test_generated_partition_prunes_via_base_column_stats(spark, tmp_path):
     assert len(months) == 3  # Jan/Feb/Mar at 4 rows/day
     register_cow_batch(spark)
     schema = cow.read(spark, path).schema
-    rdr = CowBatchDataSource._reader_cls(schema, {"tablePath": path})
+    rdr = CowBatchReader(schema, {"tablePath": path})
     total = len(rdr.partitions())
-    rdr2 = CowBatchDataSource._reader_cls(schema, {"tablePath": path})
+    rdr2 = CowBatchReader(schema, {"tablePath": path})
     list(
         rdr2.pushFilters(
             [
