@@ -87,6 +87,7 @@ from urllib.parse import urlsplit
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import sqltext
 from .hashing import (
     BLOOM_K,
     BLOOM_M_BITS,
@@ -1297,97 +1298,8 @@ _EQ_ONLY_RE = re.compile(r"^\s*(\w+)\s*=\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$")
 _LIT_RE = re.compile(r"^\s*('(?:[^']*)'|-?\d+(?:\.\d+)?)\s*$")
 
 
-def _mask_quotes_parens(text: str) -> str | None:
-    """``text`` with quoted literals AND parenthesized groups blanked
-    out; None for unbalanced quotes (not a shape we understand)."""
-    out, in_quote, depth = [], False, 0
-    for ch in text:
-        if ch == "'":
-            in_quote = not in_quote
-            out.append(" ")
-        elif in_quote:
-            out.append(" ")
-        elif ch == "(":
-            depth += 1
-            out.append(" ")
-        elif ch == ")":
-            depth = max(0, depth - 1)
-            out.append(" ")
-        else:
-            out.append(ch if depth == 0 else " ")
-    return None if in_quote else "".join(out)
-
-
-def _split_toplevel_kw(text: str, keyword: str) -> list[str]:
-    """Split on whole-word ``keyword`` (case-insensitive) outside
-    quotes and parens."""
-    up, kw = text.upper(), keyword.upper()
-    parts, buf = [], []
-    in_quote, depth, i, n = False, 0, 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and up.startswith(kw, i):
-                before = text[i - 1] if i else " "
-                j = i + len(kw)
-                after = text[j] if j < n else " "
-                if not (before.isalnum() or before == "_") and not (
-                    after.isalnum() or after == "_"
-                ):
-                    parts.append("".join(buf))
-                    buf = []
-                    i = j
-                    continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return parts
-
-
-def _split_commas(text: str) -> list[str]:
-    """Comma split outside quotes/parens."""
-    parts, buf, in_quote, depth = [], [], False, 0
-    for ch in text:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == "," and not in_quote and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    parts.append("".join(buf))
-    return parts
-
-
 def _parse_literal(lit: str) -> object:
     return lit[1:-1] if lit.startswith("'") else (float(lit) if "." in lit else int(lit))
-
-
-def _strip_one_paren(s: str) -> str:
-    """Remove ONE balanced outer paren pair wrapping the whole string."""
-    s = s.strip()
-    if not (s.startswith("(") and s.endswith(")")):
-        return s
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and i != len(s) - 1:
-                return s
-    return s[1:-1].strip()
 
 
 def _parse_conjuncts(condition: str) -> list[tuple[str, str, object]]:
@@ -1398,16 +1310,17 @@ def _parse_conjuncts(condition: str) -> list[tuple[str, str, object]]:
     # refutes a=1 by stats yet must survive): parse nothing, prune
     # nothing. OR *inside parens* is contained — each top-level AND
     # part is still required, and a parenthesized OR-of-equality on one
-    # column is recognized as an IN-list below. Quoted literals never
-    # split (the splitter is quote-aware), so "s = 'a AND k = 3'" is
-    # one conjunct, not two.
-    masked = _mask_quotes_parens(condition)
-    if masked is None:
+    # column is recognized as an IN-list below. Literals and comments
+    # never split (``sqltext`` masks them), so "s = 'a AND k = 3'" is
+    # one conjunct, not two. Text we cannot read (an open literal or
+    # comment, unpaired parens) prunes nothing.
+    if not sqltext.balanced(condition):
         return []
+    masked = sqltext.toplevel(condition)
     if _NON_CONJUNCTIVE_RE.search(_IS_NOT_NULL_MASK_RE.sub("ISNOTNULL", masked)):
         return []
     out: list[tuple[str, str, object]] = []
-    for part in _split_toplevel_kw(condition, "AND"):
+    for part in sqltext.split_keyword(condition, "AND"):
         out.extend(_parse_part(part))
     return out
 
@@ -1425,13 +1338,13 @@ def _parse_part(part: str) -> list[tuple[str, str, object]]:
         return [(col, op, _parse_literal(lit))]
     im = _IN_HEAD_RE.match(part)
     if im:
-        items = [i.strip() for i in _split_commas(im.group(2))]
+        items = [i.strip() for i in sqltext.split_commas(im.group(2))]
         if items and all(_LIT_RE.match(i) for i in items):  # plain literals only
             return [(im.group(1), "in", [_parse_literal(i) for i in items])]
         return []
-    stripped = _strip_one_paren(part)
+    stripped = sqltext.strip_parens(part)
     if stripped != part.strip():
-        ors = _split_toplevel_kw(stripped, "OR")
+        ors = sqltext.split_keyword(stripped, "OR")
         if len(ors) == 1:
             return _parse_part(stripped)  # plain parenthesized conjunct
         eqs = [_EQ_ONLY_RE.match(p) for p in ors]
@@ -4253,31 +4166,14 @@ def _refuse_source_refs(text: str, what: str) -> None:
     source match — every ``s.*`` slot in the merge join is NULL for
     them by construction, so a source reference can only ever read
     NULL. Delta refuses such references outright and so do we.
-    Word-boundary scan for ``s.`` outside single-quoted literals
-    (mirrors the gate's alias rewriter so ``'s.'`` inside a string
-    literal stays legal)."""
-    in_quote = False
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-            i += 1
-            continue
-        if not in_quote:
-            # both the bare and the backtick-quoted alias forms count
-            # (`s`.col resolves to the source exactly like s.col)
-            mm = re.match(r"(?:s|`s`)\s*\.", text[i:], re.IGNORECASE)
-            before_ok = i == 0 or not (
-                text[i - 1].isalnum() or text[i - 1] in "_`."
-            )
-            if mm and before_ok:
-                raise ValueError(
-                    f"NOT MATCHED BY SOURCE {what} cannot reference the "
-                    f"source (no source row exists for these target "
-                    f"rows): {text!r}"
-                )
-        i += 1
+    ``s.`` and ```s`.`` count; inside a literal or comment they stay
+    legal."""
+    if sqltext.alias_refs(text, "s"):
+        raise ValueError(
+            f"NOT MATCHED BY SOURCE {what} cannot reference the "
+            f"source (no source row exists for these target "
+            f"rows): {text!r}"
+        )
 
 
 def _key_candidates(
@@ -5799,6 +5695,15 @@ def compact(
     )
 
 
+def cdc_identity(entry: dict) -> tuple:
+    """The change-feed identity of a manifest entry: (file, deletion
+    vector). A merge-on-read commit leaves the file in place but swaps
+    its dv reference, which must surface as removed(old live rows) +
+    added(new live rows) so the bag-EXCEPT yields the DV'd rows. The
+    batch ``changes`` and the ``cowcdc`` stream both diff by it."""
+    return (entry["name"], (entry.get("dv") or {}).get("name"))
+
+
 def changes(
     spark: SparkSession,
     table_path: str,
@@ -5851,24 +5756,16 @@ def changes(
     _reject_maps(_snapshot_schema(_load_manifest(spark, table_path, hi)), hi)
     out: DataFrame | None = None
     prev = _load_manifest(spark, table_path, from_snapshot)
-
-    def _eff(f: dict) -> tuple:
-        # the CDC identity of an entry is (file, deletion vector): a
-        # merge-on-read commit leaves the file in place but swaps its
-        # dv reference, which must surface as removed(old live rows) +
-        # added(new live rows) so the bag-EXCEPT yields the DV'd rows
-        return (f["name"], (f.get("dv") or {}).get("name"))
-
     for n in range(from_snapshot + 1, hi + 1):
         cur = _load_manifest(spark, table_path, n)
-        prev_ids = {_eff(f) for f in prev["files"]}
-        cur_ids = {_eff(f) for f in cur["files"]}
+        prev_ids = {cdc_identity(f) for f in prev["files"]}
+        cur_ids = {cdc_identity(f) for f in cur["files"]}
         removed = sorted(
-            (f for f in prev["files"] if _eff(f) not in cur_ids),
+            (f for f in prev["files"] if cdc_identity(f) not in cur_ids),
             key=lambda f: f["name"],
         )
         added = sorted(
-            (f for f in cur["files"] if _eff(f) not in prev_ids),
+            (f for f in cur["files"] if cdc_identity(f) not in prev_ids),
             key=lambda f: f["name"],
         )
         prev = cur

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from . import catalog as _cat
 from . import cowtable as cow
+from . import sqltext
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 _AGG_ITEM_RE = re.compile(
@@ -57,27 +58,6 @@ _AGG_ITEM_RE = re.compile(
     re.IGNORECASE,
 )
 _BARE_COL_RE = re.compile(rf"^`?{_IDENT}`?$")
-
-
-def _split_toplevel_commas(text: str) -> list[str]:
-    out, cur, depth, in_quote = [], [], 0, False
-    for ch in text:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        out.append(tail)
-    return out
 
 
 def parse_mv_spec(spark: SparkSession, body: str) -> dict | None:
@@ -91,18 +71,18 @@ def parse_mv_spec(spark: SparkSession, body: str) -> dict | None:
     alias``. The WHERE predicate is row-local (applied identically to
     the initial aggregate and to every CDF row), which is exactly the
     class a signed-delta fold is sound for."""
-    from .sql_gate import _find_toplevel_keyword, _unquote
+    from .sql_gate import _unquote
 
     s = body.strip().rstrip(";").strip()
     if not re.match(r"^SELECT\b", s, re.IGNORECASE):
         return None
-    f_i = _find_toplevel_keyword(s, "FROM")
-    g_i = _find_toplevel_keyword(s, "GROUP")
+    f_i = sqltext.find_keyword(s, "FROM")
+    g_i = sqltext.find_keyword(s, "GROUP")
     if f_i < 0 or g_i < 0:
         return None
     for kw in ("HAVING", "ORDER", "LIMIT", "QUALIFY", "JOIN", "UNION",
                "INTERSECT", "EXCEPT", "DISTINCT", "WINDOW"):
-        if _find_toplevel_keyword(s, kw) >= 0:
+        if sqltext.find_keyword(s, kw) >= 0:
             return None
     items_txt = s[len("SELECT"):f_i]
     after_from = s[f_i + len("FROM"):g_i]
@@ -111,14 +91,14 @@ def parse_mv_spec(spark: SparkSession, body: str) -> dict | None:
     if not gm:
         return None
     group_cols = []
-    for g in _split_toplevel_commas(gm.group(1)):
+    for g in (p.strip() for p in sqltext.split_commas(gm.group(1))):
         if not _BARE_COL_RE.match(g):
             return None
         group_cols.append(g.strip("`"))
     if not group_cols:
         return None
 
-    w_i = _find_toplevel_keyword(after_from, "WHERE")
+    w_i = sqltext.find_keyword(after_from, "WHERE")
     where = None
     base_txt = after_from.strip()
     if w_i >= 0:
@@ -136,7 +116,7 @@ def parse_mv_spec(spark: SparkSession, body: str) -> dict | None:
         return None
 
     aggs, user_cols, seen_groups = [], [], set()
-    for item in _split_toplevel_commas(items_txt):
+    for item in (p.strip() for p in sqltext.split_commas(items_txt)):
         am = _AGG_ITEM_RE.match(item)
         if am:
             fn, arg, alias = (

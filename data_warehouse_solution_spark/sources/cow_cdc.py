@@ -52,6 +52,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..cowtable import cdc_identity
 from . import _local
 
 
@@ -102,14 +103,6 @@ class CowCdcStreamReader(DataSourceStreamReader):
 
     def partitions(self, start, end):
         lo, hi = start["snapshot"], end["snapshot"]
-
-        def _eff(f):
-            # CDC identity = (file, deletion vector): a merge-on-read
-            # commit keeps the file but swaps its dv reference, which
-            # must stream as removed(old live rows) + added(new live
-            # rows) — mirroring cowtable.changes()
-            return (f["name"], (f.get("dv") or {}).get("name"))
-
         # startingSnapshot=0 replays ALL history: snapshot ids start
         # at 1, so the pre-create state is a synthesized empty
         # manifest and commit 1 streams as pure inserts
@@ -117,8 +110,8 @@ class CowCdcStreamReader(DataSourceStreamReader):
         out = []
         for n in range(lo + 1, hi + 1):
             m = _local.load_manifest(self.table_path, n)
-            pf = {_eff(f) for f in prev["files"]}
-            cf = {_eff(f) for f in m["files"]}
+            pf = {cdc_identity(f) for f in prev["files"]}
+            cf = {cdc_identity(f) for f in m["files"]}
             out.append(
                 CommitPartition(
                     self.table_path,

@@ -15,10 +15,12 @@ real snapshot commits and DROP TABLE removes the table — and SELECT
 reads them through ``cow.`<path>``` table references with optional
 ``VERSION AS OF`` / ``TIMESTAMP AS OF`` time travel, so every
 whitelisted verb executes against snapshot tables.
-Statement splitting is QUOTE- AND PAREN-AWARE
-throughout: a ``WHERE`` or comma inside a string literal never splits
-(the naive first-``WHERE`` regex mis-parsed
-``UPDATE t SET note = 'x WHERE y' WHERE k = 1``).
+Statement splitting is literal-, comment- and paren-aware throughout:
+a ``WHERE`` or comma inside a quoted literal, a backticked identifier,
+a ``--`` / ``/* */`` comment or parentheses never splits (the naive
+first-``WHERE`` regex mis-parsed
+``UPDATE t SET note = 'x WHERE y' WHERE k = 1``). That rule lives
+once, in ``sqltext``; this module never scans quotes or parens itself.
 """
 
 from __future__ import annotations
@@ -27,6 +29,8 @@ import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import sqltext
 
 # pipeline.py:110-114, plus WITH (CTE prologue of a SELECT)
 ALLOWED_VERBS = (
@@ -56,8 +60,8 @@ def filter_sql_commands(commands: list[str]) -> list[str]:
     return out
 
 
-# heads only bind the verb + target; the clause tail is split by the
-# quote/paren-aware scanner below, never by regex
+# heads only bind the verb + target; the clause tail is split by
+# sqltext, never by regex
 _ALTER_RENAME_TABLE_RE = re.compile(
     r"^\s*ALTER\s+TABLE\s+(\S+)\s+RENAME\s+TO\s+(\S+)\s*$", re.IGNORECASE
 )
@@ -336,45 +340,10 @@ _COPY_OPTS_RE = re.compile(
 _COPY_KV_RE = re.compile(r"'([^']*)'\s*=\s*'([^']*)'")
 
 
-def _find_toplevel_all(text: str, keyword: str) -> list[int]:
-    """Every index of whole-word ``keyword`` (case-insensitive)
-    outside single-quoted literals and outside parentheses. This is
-    the statement-level analogue of the scanner
-    ``_split_assignments`` uses — ``'x WHERE y'`` and
-    ``(SELECT ... WHERE ...)`` never match."""
-    up = text.upper()
-    kw = keyword.upper()
-    in_quote, depth = False, 0
-    out: list[int] = []
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and up.startswith(kw, i):
-                before = text[i - 1] if i else " "
-                j = i + len(kw)
-                after = text[j] if j < len(text) else " "
-                if not (before.isalnum() or before == "_") and not (
-                    after.isalnum() or after == "_"
-                ):
-                    out.append(i)
-    return out
-
-
-def _find_toplevel_keyword(text: str, keyword: str) -> int:
-    """First match of ``_find_toplevel_all``; -1 if none."""
-    matches = _find_toplevel_all(text, keyword)
-    return matches[0] if matches else -1
-
-
 def _split_where(tail: str) -> tuple[str, str | None]:
     """Split ``tail`` at its first TOP-LEVEL ``WHERE``; returns
     (before, condition) with condition None when there is no WHERE."""
-    idx = _find_toplevel_keyword(tail, "WHERE")
+    idx = sqltext.find_keyword(tail, "WHERE")
     if idx < 0:
         return tail.strip(), None
     cond = tail[idx + len("WHERE") :].strip()
@@ -387,41 +356,13 @@ def _split_where(tail: str) -> tuple[str, str | None]:
     return tail[:idx].strip(), cond
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Remove ONE balanced outer paren pair if it wraps the whole
-    string — balance-aware, so ``d decimal(10,2)`` is untouched."""
-    s = s.strip()
-    if not (s.startswith("(") and s.endswith(")")):
-        return s
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0 and i != len(s) - 1:
-                return s  # closes before the end: not a single wrapper
-    return s[1:-1].strip()
-
-
 def _split_assignments(set_clause: str) -> dict[str, str]:
-    """SET a = e1, b = e2 -> {a: e1, b: e2}; commas inside quoted
-    literals or parenthesized call arguments do not split."""
-    parts, buf, in_quote, depth = [], [], False, 0
-    for ch in set_clause:
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote and ch == "(":
-            depth += 1
-        elif not in_quote and ch == ")":
-            depth -= 1
-        if ch == "," and not in_quote and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        parts.append("".join(buf))
+    """SET a = e1, b = e2 -> {a: e1, b: e2}; commas inside literals or
+    parenthesized call arguments do not split; an empty last part (a
+    trailing comma) is dropped."""
+    parts = sqltext.split_commas(set_clause)
+    if not parts[-1]:
+        parts.pop()
     out = {}
     for p in parts:
         col, _, expr = p.partition("=")
@@ -468,6 +409,21 @@ def _resolve_target(spark: SparkSession, target: str) -> str:
     return t
 
 
+def _cow_target(
+    spark: SparkSession, m: re.Match | None, group: int = 1
+) -> str | None:
+    """The resolved path of target ``group`` of head match ``m`` when
+    it is a COW snapshot table; None when ``m`` is None or the target
+    is not one (the statement then falls through). One catalog read
+    per statement branch."""
+    from . import cowtable as cow
+
+    if m is None:
+        return None
+    path = _resolve_target(spark, m.group(group))
+    return path if cow.is_cow_table(spark, path) else None
+
+
 def _scan_create_clause(
     statement: str, keyword: str
 ) -> tuple[str, str | None]:
@@ -475,31 +431,16 @@ def _scan_create_clause(
     region (before the ``AS <payload>`` head, so a query mentioning a
     same-named function is never eaten) and return (statement with
     the clause removed, the inner text) — or (statement, None) when
-    absent. One quote-aware balanced scan shared by the
-    GENERATED/DEFAULTS/IDENTITY clause extractors, so their paren and
-    string-literal handling can never drift apart."""
+    absent. Shared by the GENERATED/DEFAULTS/IDENTITY clause
+    extractors."""
     pm = re.search(r"\s+AS\s+(SELECT|VALUES|WITH)\b", statement, re.IGNORECASE)
     limit = pm.start() if pm else len(statement)
     gm = re.search(rf"\b{keyword}\s*\(", statement[:limit], re.IGNORECASE)
     if not gm:
         return statement, None
     i = gm.end() - 1
-    depth, j, in_str = 0, i, False
-    while j < len(statement):
-        ch = statement[j]
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if depth != 0:
+    j = sqltext.close_paren(statement, i)
+    if j < 0:
         raise ValueError(f"unbalanced parentheses in {keyword} clause")
     return statement[: gm.start()] + statement[j + 1 :], statement[i + 1 : j]
 
@@ -522,10 +463,8 @@ def _extract_generated_clause(
     rest, inner = _scan_create_clause(statement, keyword)
     if inner is None:
         return statement, None
-    from .cowtable import _split_commas
-
     gen: dict[str, str] = {}
-    for e in _split_commas(inner):
+    for e in sqltext.split_commas(inner):
         em = re.match(
             r"^\s*`?(\w+)`?\s+AS\s*\((.*)\)\s*$", e, re.IGNORECASE | re.DOTALL
         )
@@ -629,21 +568,21 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
         register_as = _cat.normalize_name(raw_target)
         target = f"{_cat.catalog_dir(spark)}/tables/{register_as}"
     rest = hm.group(2)
-    k_i = _find_toplevel_keyword(rest, "KEYS")
+    k_i = sqltext.find_keyword(rest, "KEYS")
     if k_i < 0:
         raise ValueError("APPLY CHANGES requires KEYS (col, ...)")
     payload = rest[:k_i].strip()
     after = rest[k_i + len("KEYS") :].lstrip()
     if not after.startswith("("):
         raise ValueError("APPLY CHANGES KEYS requires a parenthesized column list")
-    close = after.index(")") if ")" in after else -1
+    close = sqltext.close_paren(after, 0)
     if close < 0:
         raise ValueError("unbalanced parens in APPLY CHANGES KEYS")
     keys = [c.strip().strip("`") for c in after[1:close].split(",") if c.strip()]
     if not keys:
         raise ValueError("APPLY CHANGES KEYS list is empty")
     after = after[close + 1 :]
-    s_i = _find_toplevel_keyword(after, "SEQUENCE")
+    s_i = sqltext.find_keyword(after, "SEQUENCE")
     if s_i < 0:
         raise ValueError("APPLY CHANGES requires SEQUENCE BY <col>")
     between, seq_part = after[:s_i].strip(), after[s_i + len("SEQUENCE") :].strip()
@@ -670,31 +609,7 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
             f"malformed APPLY CHANGES SEQUENCE BY tail: {seq_part!r}"
         )
     sequence_by, scd_type = sm.group(1), int(sm.group(2) or 1)
-    # source: table/view name or parenthesized subquery (optional alias)
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError("unbalanced parens in APPLY CHANGES FROM")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed APPLY CHANGES FROM tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-    else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed APPLY CHANGES source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
+    src, _ = _read_source(spark, payload, "APPLY CHANGES FROM", "APPLY CHANGES")
     missing = [k for k in keys if k not in src.columns]
     if missing or sequence_by not in src.columns:
         raise ValueError(
@@ -751,6 +666,30 @@ def _apply_changes_sql(spark: SparkSession, statement: str) -> DataFrame | None:
         raise
 
 
+def _read_source(
+    spark: SparkSession, payload: str, clause: str, noun: str
+) -> tuple[DataFrame, str | None]:
+    """A statement's source: a parenthesized query (run through the
+    gate, so SELECT/VALUES/WITH and ``cow.`...``` refs all work) or a
+    table/view name, either one with an optional ``[AS] alias``.
+    Returns the source rows and the alias (None when absent);
+    ``clause`` and ``noun`` name the source in refusals."""
+    if payload.startswith("("):
+        close = sqltext.close_paren(payload, 0)
+        if close < 0:
+            raise ValueError(f"unbalanced parens in {clause}: {payload!r}")
+        tail = payload[close + 1 :].strip()
+        am = re.fullmatch(r"(?:AS\s+)?(\w+)", tail, re.IGNORECASE)
+        if tail and not am:
+            raise ValueError(f"malformed {clause} tail: {tail!r}")
+        return run_sql(spark, payload[1:close].strip()), am and am.group(1)
+    toks = payload.split()
+    if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
+        raise ValueError(f"malformed {noun} source: {payload!r}")
+    alias = toks[-1] if len(toks) > 1 else None
+    return run_sql(spark, f"SELECT * FROM {toks[0]}"), alias
+
+
 def _default_target_alias(spark: SparkSession, raw_target: str) -> str:
     """Implicit alias for a join-form DML target: a simple catalog
     NAME doubles as its own qualifier (the DuckDB/Postgres idiom
@@ -783,36 +722,15 @@ def _join_form_dml(
     inserts — join-form DML never creates rows)."""
     from . import cowtable as cow
 
-    # source: parenthesized subquery or table/view name, optional alias
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError(f"unbalanced parens in join-form source: {payload!r}")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed join-form source tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-        s_alias = re.sub(r"^AS\s+", "", tail, flags=re.IGNORECASE) or "s"
-    else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed join-form source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
-        s_alias = toks[-1] if len(toks) > 1 else toks[0].rsplit(".", 1)[-1]
+    src, s_alias = _read_source(spark, payload, "join-form source", "join-form")
+    if s_alias is None and payload.startswith("("):
+        s_alias = "s"
+    elif s_alias is None:
+        # an unaliased name qualifies its own columns
+        s_alias = payload.split()[0].rsplit(".", 1)[-1]
     t_l, s_l = t_alias.lower(), s_alias.lower()
     keys, residual = [], []
-    for part in _split_toplevel_and(cond):
+    for part in sqltext.split_keyword(cond, "AND"):
         km = _MERGE_KEY_EQ_RE.match(part)
         if km and km.group(2) == km.group(4):
             q1 = (km.group(1) or "").lower()
@@ -846,24 +764,13 @@ def _strip_trailing_line_comment(body: str) -> str:
     closing newline) plans fine standalone at CREATE, yet once the
     body is inlined as ``(body)`` at read time the comment swallows
     the closing paren and the view becomes unreadable (r13 ADVICE).
-    Strip EOF-reaching line comments (outside single-quoted literals)
-    before storing; mid-body comments terminate at their newline and
-    are harmless, so they stay."""
+    Strip EOF-reaching line comments (outside literals and block
+    comments) before storing; mid-body comments terminate at their
+    newline and are harmless, so they stay."""
     while True:
         body = body.rstrip()
-        in_quote, cut, i = False, None, 0
-        while i < len(body):
-            ch = body[i]
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote and body[i : i + 2] == "--":
-                j = body.find("\n", i)
-                if j < 0:
-                    cut = i
-                    break
-                i = j
-            i += 1
-        if cut is None:
+        cut = sqltext.mask(body).rfind("--")
+        if cut < 0 or "\n" in body[cut:]:
             return body
         body = body[:cut]
 
@@ -1002,14 +909,14 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             )
             statement, ident_cols = _extract_identity_clause(statement)
         lk = _CREATE_LIKE_RE.match(statement)
-        if lk and cow.is_cow_table(spark, _resolve_target(spark, lk.group(2))):
+        src = _cow_target(spark, lk, 2)
+        if src is not None:
             # CREATE TABLE <new> LIKE <cow-src> [LOCATION '/p'] — shape
             # clone (schema/layout/constraints/defaults/identity-reset),
             # no data. A bare-name target registers in the catalog
             # (LOCATION required, like the USING cow name form).
             from . import catalog as _cat
 
-            src = _resolve_target(spark, lk.group(2))
             raw_target, location = lk.group(1), lk.group(3)
             name = (
                 _unquote(raw_target)
@@ -1288,7 +1195,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             from . import catalog as _cat
 
             old, new = _unquote(rt.group(1)), _unquote(rt.group(2))
-            if _cat.is_name(old) and _cat.resolve(spark, old) is not None:
+            path_ = _cat.resolve(spark, old) if _cat.is_name(old) else None
+            if path_ is not None:
                 if not _cat.is_name(new):
                     raise ValueError(
                         f"RENAME TO target {new!r} is not a valid "
@@ -1299,14 +1207,14 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                         f"table name {new!r} is already registered — "
                         "DROP TABLE it first"
                     )
-                path_ = _cat.resolve_or_raise(spark, old)
                 _cat.register(spark, new, path_)
                 _cat.unregister(spark, old)
                 return spark.createDataFrame(
                     [(old, new, path_)], "old string, new string, path string"
                 )
         tp = _ALTER_SET_TP_RE.match(statement)
-        if tp and cow.is_cow_table(spark, _resolve_target(spark, tp.group(1))):
+        path = _cow_target(spark, tp)
+        if path is not None:
             # SET TBLPROPERTIES (r11): the write_mode toggle, with the
             # same refuse-loudly validation as CREATE's TBLPROPERTIES
             raw = tp.group(2)
@@ -1329,20 +1237,20 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     "remove the clause"
                 )
             snap = cow.alter_set_write_mode(
-                spark, _resolve_target(spark, tp.group(1)), props["write_mode"]
+                spark, path, props["write_mode"]
             )
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         nn_set = _ALTER_SET_NOTNULL_RE.match(statement)
         nn_drop = _ALTER_DROP_NOTNULL_RE.match(statement)
         nn = nn_set or nn_drop
-        if nn and cow.is_cow_table(spark, _resolve_target(spark, nn.group(1))):
+        npath = _cow_target(spark, nn)
+        if npath is not None:
             # Delta's NOT NULL column constraint (r11 late) — sugar
             # over the CHECK machinery: SET validates the EXISTING
             # content first (add_check_constraint's one-aggregate
             # rule) and every later write validates its own rows;
             # c IS NOT NULL evaluates FALSE (not NULL) on a NULL, so
             # SQL's NULL-evaluations-pass rule never lets one through
-            npath = _resolve_target(spark, nn.group(1))
             col = nn.group(2)
             if nn_set:
                 snap = cow.add_check_constraint(
@@ -1354,14 +1262,14 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
         df_set = _ALTER_SET_DEFAULT_RE.match(statement)
         df_drop = _ALTER_DROP_DEFAULT_RE.match(statement)
         dfm = df_set or df_drop
-        if dfm and cow.is_cow_table(spark, _resolve_target(spark, dfm.group(1))):
+        dpath = _cow_target(spark, dfm)
+        if dpath is not None:
             # r11 column DEFAULTs (Delta/Spark 3.4): metadata-only;
             # future INSERTs omitting the column fill the expression
-            dpath = _resolve_target(spark, dfm.group(1))
             if df_set:
                 snap = cow.alter_set_column_default(
                     spark, dpath, df_set.group(2),
-                    _strip_outer_parens(df_set.group(3).strip()),
+                    sqltext.strip_parens(df_set.group(3).strip()),
                 )
             else:
                 snap = cow.alter_drop_column_default(
@@ -1371,10 +1279,10 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
         tg_add = _ALTER_CREATE_TAG_RE.match(statement)
         tg_drop = _ALTER_DROP_TAG_RE.match(statement)
         tg = tg_add or tg_drop
-        if tg and cow.is_cow_table(spark, _resolve_target(spark, tg.group(1))):
+        tpath = _cow_target(spark, tg)
+        if tpath is not None:
             # r11 snapshot tags (Iceberg named refs): metadata-only
             # commits; tagged snapshots survive VACUUM until dropped
-            tpath = _resolve_target(spark, tg.group(1))
             if tg_add:
                 snap = cow.create_tag(
                     spark,
@@ -1393,7 +1301,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
         pf_add = _ALTER_ADD_PF_RE.match(statement)
         pf_drop = _ALTER_DROP_PF_RE.match(statement)
         pf = pf_add or pf_drop
-        if pf and cow.is_cow_table(spark, _resolve_target(spark, pf.group(1))):
+        path = _cow_target(spark, pf)
+        if path is not None:
             # r11 partition-spec evolution (Iceberg ADD/DROP PARTITION
             # FIELD): metadata-only — no data rewrite; old files keep
             # pruning under their own spec vintage
@@ -1402,21 +1311,22 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 if pf_add
                 else cow.alter_drop_partition_field
             )
-            snap = fn(spark, _resolve_target(spark, pf.group(1)), pf.group(2))
+            snap = fn(spark, path, pf.group(2))
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         ck_add = _ALTER_ADD_CK_RE.match(statement)
         ck_drop = _ALTER_DROP_CK_RE.match(statement)
         ck = ck_add or ck_drop
-        if ck and cow.is_cow_table(spark, _resolve_target(spark, ck.group(1))):
+        path = _cow_target(spark, ck)
+        if path is not None:
             # Delta-style CHECK constraints (engine extension: the
             # reference whitelists the ALTER verb and delegates)
             if ck_add:
                 snap = cow.add_check_constraint(
-                    spark, _resolve_target(spark, ck.group(1)), ck.group(2), ck.group(3).strip()
+                    spark, path, ck.group(2), ck.group(3).strip()
                 )
             else:
                 snap = cow.drop_check_constraint(
-                    spark, _resolve_target(spark, ck.group(1)), ck.group(2)
+                    spark, path, ck.group(2)
                 )
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         av = _ALTER_VIEW_RE.match(statement)
@@ -1436,31 +1346,37 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             # unknown name: a native Spark (temp) view may own it —
             # fall through to spark.sql
         rn = _ALTER_RENAME_RE.match(statement)
-        if rn and cow.is_cow_table(spark, _resolve_target(spark, rn.group(1))):
+        path = _cow_target(spark, rn)
+        if path is not None:
             snap = cow.alter_rename_column(
-                spark, _resolve_target(spark, rn.group(1)), rn.group(2), rn.group(3)
+                spark, path, rn.group(2), rn.group(3)
             )
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         wd = _ALTER_WIDEN_RE.match(statement)
-        if wd and cow.is_cow_table(spark, _resolve_target(spark, wd.group(1))):
+        path = _cow_target(spark, wd)
+        if path is not None:
             snap = cow.alter_widen_column(
-                spark, _resolve_target(spark, wd.group(1)), wd.group(2), wd.group(3).strip()
+                spark, path, wd.group(2), wd.group(3).strip()
             )
             return spark.createDataFrame([(snap,)], "snapshot_id long")
         am = _ALTER_ADD_RE.match(statement)
         rm = _ALTER_DROP_RE.match(statement)
-        target = _resolve_target(spark, (am or rm).group(1)) if (am or rm) else None
-        if target and cow.is_cow_table(spark, target):
+        target = _cow_target(spark, am or rm)
+        if target is not None:
             if am:
-                snap = cow.alter_add_columns(spark, target, _strip_outer_parens(am.group(2)))
+                snap = cow.alter_add_columns(spark, target, sqltext.strip_parens(am.group(2)))
             else:
                 snap = cow.alter_drop_column(spark, target, rm.group(2))
             return spark.createDataFrame([(snap,)], "snapshot_id long")
     elif verb == "DELETE":
+        # DELETE/UPDATE/MERGE clause text is re-embedded in engine
+        # SQL, where a line comment would swallow what follows it
+        statement = sqltext.strip_comments(statement)
         dm = _DELETE_HEAD_RE.match(statement)
-        if dm and cow.is_cow_table(spark, _resolve_target(spark, dm.group(1))):
+        path = _cow_target(spark, dm)
+        if path is not None:
             tail = dm.group(2)
-            u_i = _find_toplevel_keyword(tail, "USING")
+            u_i = sqltext.find_keyword(tail, "USING")
             if u_i >= 0:
                 # DELETE FROM t [alias] USING src [alias] WHERE ...
                 before = tail[:u_i].strip()
@@ -1475,7 +1391,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                         )
                     t_alias = am.group(1)
                 after = tail[u_i + len("USING") :]
-                w_i = _find_toplevel_keyword(after, "WHERE")
+                w_i = sqltext.find_keyword(after, "WHERE")
                 if w_i < 0:
                     raise ValueError(
                         "DELETE ... USING requires a WHERE join condition"
@@ -1485,7 +1401,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     raise ValueError("WHERE clause present but empty")
                 return _join_form_dml(
                     spark,
-                    _resolve_target(spark, dm.group(1)),
+                    path,
                     t_alias,
                     after[:w_i].strip(),
                     cond,
@@ -1495,18 +1411,20 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             if before:
                 raise ValueError(f"malformed DELETE tail: {before!r}")
             return _stats_df(
-                spark, cow.delete(spark, _resolve_target(spark, dm.group(1)), cond or "true")
+                spark, cow.delete(spark, path, cond or "true")
             )
     elif verb == "UPDATE":
+        statement = sqltext.strip_comments(statement)
         um = _UPDATE_HEAD_RE.match(statement)
-        if um and cow.is_cow_table(spark, _resolve_target(spark, um.group(1))):
+        path = _cow_target(spark, um)
+        if path is not None:
             rest = um.group(2)
-            f_i = _find_toplevel_keyword(rest, "FROM")
+            f_i = sqltext.find_keyword(rest, "FROM")
             if f_i >= 0:
                 # UPDATE t SET ... FROM src [alias] WHERE ... (join form)
                 set_clause = rest[:f_i].strip()
                 after = rest[f_i + len("FROM") :]
-                w_i = _find_toplevel_keyword(after, "WHERE")
+                w_i = sqltext.find_keyword(after, "WHERE")
                 if w_i < 0:
                     raise ValueError(
                         "UPDATE ... FROM requires a WHERE join condition"
@@ -1516,7 +1434,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     raise ValueError("WHERE clause present but empty")
                 return _join_form_dml(
                     spark,
-                    _resolve_target(spark, um.group(1)),
+                    path,
                     _default_target_alias(spark, um.group(1)),
                     after[:w_i].strip(),
                     cond,
@@ -1528,14 +1446,15 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 spark,
                 cow.update(
                     spark,
-                    _resolve_target(spark, um.group(1)),
+                    path,
                     cond or "true",
                     _split_assignments(set_clause),
                 ),
             )
     elif verb == "INSERT":
         om = _INSERT_OVERWRITE_RE.match(statement)
-        if om and cow.is_cow_table(spark, _resolve_target(spark, om.group(1))):
+        target = _cow_target(spark, om)
+        if target is not None:
             # INSERT OVERWRITE [TABLE] t [PARTITION (c='v', ...)] <payload>
             # — ONE replace_where commit (atomic: readers see old or
             # new, never the gap a TRUNCATE+INSERT pair publishes).
@@ -1544,9 +1463,6 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             # and injects the literals into the payload rows.
             from pyspark.sql import functions as _F
 
-            from .cowtable import _split_commas
-
-            target = _resolve_target(spark, om.group(1))
             rows = run_sql(spark, om.group(3).strip())
             head = cow.table_head_meta(spark, target)
             schema = cow.table_schema(spark, target)
@@ -1555,7 +1471,7 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             )
             if om.group(2):
                 pcols: list[tuple[str, str]] = []
-                for item in _split_commas(om.group(2)):
+                for item in sqltext.split_commas(om.group(2)):
                     if "=" not in item:
                         raise ValueError(
                             "INSERT OVERWRITE PARTITION expects "
@@ -1613,7 +1529,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 ),
             )
         rm = _INSERT_REPLACE_RE.match(statement)
-        if rm and cow.is_cow_table(spark, _resolve_target(spark, rm.group(1))):
+        target = _cow_target(spark, rm)
+        if target is not None:
             # INSERT INTO t REPLACE WHERE <cond> <SELECT|VALUES|WITH ...>
             # (Delta's overwrite-by-filter): the condition runs up to
             # the first TOP-LEVEL payload keyword — a parenthesized
@@ -1621,13 +1538,12 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             tail = rm.group(2)
             split_at = min(
                 (i for i in (
-                    _find_toplevel_keyword(tail, kw) for kw in ("SELECT", "VALUES", "WITH")
+                    sqltext.find_keyword(tail, kw) for kw in ("SELECT", "VALUES", "WITH")
                 ) if i >= 0),
                 default=-1,
             )
             if split_at <= 0:
                 raise ValueError("REPLACE WHERE needs a condition and a payload query")
-            target = _resolve_target(spark, rm.group(1))
             rows = run_sql(spark, tail[split_at:].strip())
             schema = cow.table_schema(spark, target)
             if len(schema.fields) != len(rows.columns):
@@ -1645,8 +1561,8 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                 ),
             )
         im = _INSERT_HEAD_RE.match(statement)
-        if im and cow.is_cow_table(spark, _resolve_target(spark, im.group(1))):
-            target = _resolve_target(spark, im.group(1))
+        target = _cow_target(spark, im)
+        if target is not None:
             # the payload (VALUES ... / SELECT ... / WITH ...) is
             # itself a whitelisted standalone statement; run it
             # through the gate and map its columns POSITIONALLY onto
@@ -1694,10 +1610,11 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
             return _stats_df(spark, cow.append(spark, target, rows.toDF(*names)))
     elif verb == "TRUNCATE":
         tm = _TRUNCATE_HEAD_RE.match(statement)
-        if tm and cow.is_cow_table(spark, _resolve_target(spark, tm.group(1))):
+        path = _cow_target(spark, tm)
+        if path is not None:
             # metadata-only empty-file-list commit: reversible via
             # time travel/rollback until vacuum, O(1) at any size
-            return _stats_df(spark, cow.truncate(spark, _resolve_target(spark, tm.group(1))))
+            return _stats_df(spark, cow.truncate(spark, path))
     elif verb == "DROP":
         dmv = _DROP_MATVIEW_RE.match(statement)
         if dmv:
@@ -1739,10 +1656,10 @@ def _cow_dml(spark: SparkSession, verb: str, statement: str) -> DataFrame | None
                     f"{raw!r} is a registered matview — use DROP "
                     "MATERIALIZED VIEW"
                 )
-            if _cat.is_name(raw) and _cat.resolve(spark, raw) is not None:
+            p = _cat.resolve(spark, raw) if _cat.is_name(raw) else None
+            if p is not None:
                 # named table: drop the files AND the registration —
                 # a name must never dangle to a dropped path
-                p = _cat.resolve(spark, raw)
                 if cow.is_cow_table(spark, p):
                     cow.drop(spark, p)
                 _cat.unregister(spark, raw)
@@ -1767,11 +1684,6 @@ _COW_REF_RE = re.compile(
 )
 
 
-def _in_single_quotes(text: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a single-quoted SQL literal."""
-    return text.count("'", 0, pos) % 2 == 1
-
-
 def _substitute_cow_refs(
     spark: SparkSession, statement: str, _depth: int = 0
 ) -> str:
@@ -1787,8 +1699,8 @@ def _substitute_cow_refs(
 
     View names are deterministic per (path, snapshot) and registered
     with createOrReplaceTempView, so repeated statements reuse one
-    catalog entry instead of accreting views. References inside string
-    literals are left untouched.
+    catalog entry instead of accreting views. References inside
+    literals and comments are left untouched.
 
     BUCKETED snapshot tables resolve through ``cowtable.bucketed_view``
     instead of a plain-read temp view (r7 punch-list #4): the SQL-text
@@ -1800,9 +1712,7 @@ def _substitute_cow_refs(
     non-local filesystems) fall back to the engine read silently: a
     SQL read never gets WORSE because the fast path refused."""
     out, last = [], 0
-    for m in _COW_REF_RE.finditer(statement):
-        if _in_single_quotes(statement, m.start()):
-            continue
+    for m in sqltext.code_matches(_COW_REF_RE, statement):
         view = _cow_ref_view(
             spark,
             m.group(1),
@@ -1930,8 +1840,8 @@ def _substitute_name_refs(
     TIMESTAMP AS OF time travel grammar as ``cow.`path``` refs.
 
     Only identifiers in table position (directly after FROM or JOIN,
-    outside string literals) rewrite — a column that happens to share
-    a registered name never does. SQL name precedence is honored
+    outside literals and comments) rewrite — a column that happens to
+    share a registered name never does. SQL name precedence is honored
     (r10 ADVICE): a same-named CTE in this statement's WITH clause or
     an existing temp view / native catalog table shadows the
     registered name and is never rewritten. Unregistered names are
@@ -1945,20 +1855,12 @@ def _substitute_name_refs(
     directory listing of the whole catalog per statement."""
     from . import catalog as _cat
 
-    matches = [
-        m
-        for m in _NAME_REF_RE.finditer(statement)
-        if not _in_single_quotes(statement, m.start())
-    ]
+    matches = sqltext.code_matches(_NAME_REF_RE, statement)
     if not matches:
         return statement
     # CTE names defined in this statement shadow the catalog
     # (precedence: CTE > view > catalog table > extension catalog)
-    ctes = {
-        m.group(1).lower()
-        for m in _CTE_DEF_RE.finditer(statement)
-        if not _in_single_quotes(statement, m.start())
-    }
+    ctes = {m.group(1).lower() for m in sqltext.code_matches(_CTE_DEF_RE, statement)}
 
     def _shadowed(nm: str) -> bool:
         if nm in ctes:
@@ -2064,19 +1966,6 @@ def _substitute_name_refs(
     return "".join(out)
 
 
-def _split_toplevel_and(text: str) -> list[str]:
-    """Split on top-level AND (outside quotes/parens)."""
-    parts = []
-    rest = text
-    while True:
-        i = _find_toplevel_keyword(rest, "AND")
-        if i < 0:
-            parts.append(rest)
-            return parts
-        parts.append(rest[:i])
-        rest = rest[i + 3 :]
-
-
 def _cow_merge(spark: SparkSession, statement: str) -> DataFrame | None:
     """Delta-style ``MERGE INTO <cow> USING <src> ON <key equalities>
     WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``
@@ -2092,53 +1981,29 @@ def _cow_merge(spark: SparkSession, statement: str) -> DataFrame | None:
     the Python API. Returns commit stats. None -> not a COW target."""
     from . import cowtable as cow
 
+    statement = sqltext.strip_comments(statement)
     hm = _MERGE_HEAD_RE.match(statement)
-    if not hm or not cow.is_cow_table(spark, _resolve_target(spark, hm.group(2))):
+    target = _cow_target(spark, hm, 2)
+    if target is None:
         return None
     evolve = bool(hm.group(1))  # MERGE WITH SCHEMA EVOLUTION INTO (r12)
-    target = _resolve_target(spark, hm.group(2))
     rest = hm.group(4)
-    on_i = _find_toplevel_keyword(rest, "ON")
+    on_i = sqltext.find_keyword(rest, "ON")
     if on_i < 0:
         raise ValueError("MERGE requires an ON clause")
     payload, after = rest[:on_i].strip(), rest[on_i + 2 :]
-    when_i = _find_toplevel_keyword(after, "WHEN")
+    when_i = sqltext.find_keyword(after, "WHEN")
     if when_i < 0:
         raise ValueError("MERGE requires WHEN clauses")
     cond, clauses = after[:when_i], after[when_i:]
     parsed_clauses = (
         None if _MERGE_CLAUSES_RE.match(clauses) else _parse_merge_clauses(clauses)
     )
-    # source: a parenthesized payload query (runs through the gate,
-    # so SELECT/VALUES/WITH and cow.`...` refs all work) or a
-    # table/view name; a trailing alias is accepted and ignored
-    # (column names, not aliases, drive the SET */INSERT * mapping)
-    if payload.startswith("("):
-        depth, close, in_quote = 0, -1, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
-        if close < 0:
-            raise ValueError(f"unbalanced parens in MERGE USING: {payload!r}")
-        tail = payload[close + 1 :].strip()
-        if tail and not re.fullmatch(r"(?:AS\s+)?\w+", tail, re.IGNORECASE):
-            raise ValueError(f"malformed MERGE USING tail: {tail!r}")
-        src = run_sql(spark, payload[1:close].strip())
-    else:
-        toks = payload.split()
-        if len(toks) > 3 or (len(toks) == 3 and toks[1].upper() != "AS"):
-            raise ValueError(f"malformed MERGE USING source: {payload!r}")
-        src = run_sql(spark, f"SELECT * FROM {toks[0]}")
+    # the alias only matters to the rich WHEN clauses (column names,
+    # not aliases, drive the SET */INSERT * mapping)
+    src, s_alias = _read_source(spark, payload, "MERGE USING", "MERGE USING")
     keys = []
-    for part in _split_toplevel_and(cond):
+    for part in sqltext.split_keyword(cond, "AND"):
         km = _MERGE_KEY_EQ_RE.match(part)
         if not km or km.group(2) != km.group(4):
             raise ValueError(
@@ -2167,7 +2032,7 @@ def _cow_merge(spark: SparkSession, statement: str) -> DataFrame | None:
     # fixed t (target) / s (source) before handing the expressions to
     # cowtable.merge
     t_alias = hm.group(3) or "t"
-    s_alias = _merge_source_alias(payload) or "s"
+    s_alias = s_alias or "s"
     parsed_clauses = [
         _rewrite_clause_aliases(c, t_alias, s_alias) for c in parsed_clauses
     ]
@@ -2254,21 +2119,11 @@ _MERGE_INSERT_COLS_RE = re.compile(
 
 
 def _split_toplevel_when(clauses: str) -> list[str]:
-    """Split ``WHEN ... WHEN ...`` into clause bodies (quote/paren
-    aware via _find_toplevel_keyword)."""
-    out = []
-    rest = clauses
-    i = _find_toplevel_keyword(rest, "WHEN")
-    if i != 0 and rest[:i].strip():
+    """Split ``WHEN ... WHEN ...`` into clause bodies."""
+    head, *bodies = sqltext.split_keyword(clauses, "WHEN")
+    if head.strip() or not bodies:
         raise ValueError(f"MERGE clauses must start with WHEN: {clauses!r}")
-    rest = rest[i + 4 :]
-    while True:
-        j = _find_toplevel_keyword(rest, "WHEN")
-        if j < 0:
-            out.append(rest)
-            return out
-        out.append(rest[:j])
-        rest = rest[j + 4 :]
+    return bodies
 
 
 def _parse_merge_clauses(clauses: str) -> list[dict]:
@@ -2283,7 +2138,7 @@ def _parse_merge_clauses(clauses: str) -> list[dict]:
     references)."""
     parsed = []
     for body in _split_toplevel_when(clauses):
-        then_i = _find_toplevel_keyword(body, "THEN")
+        then_i = sqltext.find_keyword(body, "THEN")
         if then_i < 0:
             raise ValueError(f"MERGE clause missing THEN: {body.strip()!r}")
         head, action = body[:then_i], body[then_i + 4 :].strip()
@@ -2307,7 +2162,7 @@ def _parse_merge_clauses(clauses: str) -> list[dict]:
             c["and"] = hm.group(3).strip()
         up = action.upper()
         if c["when"] == "not_matched_by_source" and up.startswith("UPDATE"):
-            set_i = _find_toplevel_keyword(action, "SET")
+            set_i = sqltext.find_keyword(action, "SET")
             if set_i < 0:
                 raise ValueError(f"MERGE UPDATE missing SET: {action!r}")
             set_body = action[set_i + 3 :].strip()
@@ -2326,7 +2181,7 @@ def _parse_merge_clauses(clauses: str) -> list[dict]:
                 f"only: {action!r}"
             )
         elif c["when"] == "matched" and up.startswith("UPDATE"):
-            set_i = _find_toplevel_keyword(action, "SET")
+            set_i = sqltext.find_keyword(action, "SET")
             if set_i < 0:
                 raise ValueError(f"MERGE UPDATE missing SET: {action!r}")
             set_body = action[set_i + 3 :].strip()
@@ -2341,10 +2196,8 @@ def _parse_merge_clauses(clauses: str) -> list[dict]:
             im = _MERGE_INSERT_COLS_RE.match(action)
             if not im:
                 raise ValueError(f"malformed MERGE INSERT: {action!r}")
-            from .cowtable import _split_commas
-
             cols = [x.strip().strip("`") for x in im.group(1).split(",")]
-            exprs = _split_commas(im.group(2))
+            exprs = sqltext.split_commas(im.group(2))
             if len(cols) != len(exprs):
                 raise ValueError(
                     f"MERGE INSERT column/value count mismatch: {action!r}"
@@ -2357,61 +2210,23 @@ def _parse_merge_clauses(clauses: str) -> list[dict]:
     return parsed
 
 
-def _merge_source_alias(payload: str) -> str | None:
-    """The trailing alias of the USING payload, if any."""
-    if payload.startswith("("):
-        depth, in_quote = 0, False
-        for i, ch in enumerate(payload):
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        tail = payload[i + 1 :].strip()
-                        am = re.fullmatch(r"(?:AS\s+)?(\w+)", tail, re.IGNORECASE)
-                        return am.group(1) if am else None
-        return None
-    toks = payload.split()
-    if len(toks) == 2:
-        return toks[1]
-    if len(toks) == 3 and toks[1].upper() == "AS":
-        return toks[2]
-    return None
-
-
 def _rewrite_clause_aliases(clause: dict, t_alias: str, s_alias: str) -> dict:
     """Map the statement's aliases onto the engine's fixed ``t``/``s``
-    in every condition and expression. Word-boundary replace outside
-    single-quoted literals (an alias inside a string stays verbatim)."""
+    in every condition and expression: ``sqltext.alias_refs``, so an
+    alias inside a literal or comment stays verbatim. The target alias
+    wins when both are the same name."""
 
     def _sub(expr: str) -> str:
-        out, i, in_quote = [], 0, False
-        while i < len(expr):
-            ch = expr[i]
-            if ch == "'":
-                in_quote = not in_quote
-                out.append(ch)
-                i += 1
-                continue
-            if not in_quote:
-                for alias, fixed in ((t_alias, "t"), (s_alias, "s")):
-                    mm = re.match(rf"{re.escape(alias)}\s*\.", expr[i:], re.IGNORECASE)
-                    before_ok = i == 0 or not (
-                        expr[i - 1].isalnum() or expr[i - 1] in "_`."
-                    )
-                    if mm and before_ok:
-                        out.append(f"{fixed}.")
-                        i += mm.end()
-                        break
-                else:
-                    out.append(ch)
-                    i += 1
-                continue
-            out.append(ch)
-            i += 1
+        hits = sorted(
+            [(m.start(), 0, m.end(), "t.") for m in sqltext.alias_refs(expr, t_alias)]
+            + [(m.start(), 1, m.end(), "s.") for m in sqltext.alias_refs(expr, s_alias)]
+        )
+        out, last = [], 0
+        for start, _, end, fixed in hits:
+            if start >= last:
+                out += (expr[last:start], fixed)
+                last = end
+        out.append(expr[last:])
         return "".join(out)
 
     def _norm_key(c: str) -> str:
@@ -2475,8 +2290,6 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
     the Spark plan of any embedded payload/source query. DML on
     non-engine targets delegates to ``spark.sql`` whole, keeping
     native EXPLAIN behavior untouched."""
-    from . import cowtable as cow
-
     em = _EXPLAIN_RE.match(statement)
     if not em:
         raise ValueError("EXPLAIN requires a statement to explain")
@@ -2536,14 +2349,10 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
         ]
         return "\n".join(lines)
 
-    def _is_engine_target(raw: str) -> str | None:
-        t = _resolve_target(spark, raw)
-        return t if cow.is_cow_table(spark, t) else None
-
     if ivb == "DELETE":
         dm = _DELETE_HEAD_RE.match(inner)
         if dm:
-            t = _is_engine_target(dm.group(1))
+            t = _cow_target(spark, dm)
             if t is not None:
                 cond = re.sub(
                     r"^\s*WHERE\s+", "", dm.group(2).strip(), flags=re.IGNORECASE
@@ -2560,7 +2369,7 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
     elif ivb == "UPDATE":
         um = _UPDATE_HEAD_RE.match(inner)
         if um:
-            t = _is_engine_target(um.group(1))
+            t = _cow_target(spark, um)
             if t is not None:
                 return _out(
                     _engine_header(
@@ -2577,7 +2386,7 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
             or _INSERT_HEAD_RE.match(inner)
         )
         if im:
-            t = _is_engine_target(im.group(1))
+            t = _cow_target(spark, im)
             if t is not None:
                 payload = im.group(im.lastindex).strip()
                 pvm = _VERB_RE.match(payload)
@@ -2607,7 +2416,7 @@ def _explain_sql(spark: SparkSession, statement: str) -> DataFrame:
     elif ivb == "MERGE":
         mm = _MERGE_HEAD_RE.match(inner)
         if mm:
-            t = _is_engine_target(mm.group(2))
+            t = _cow_target(spark, mm, 2)
             if t is not None:
                 return _out(
                     _engine_header(
@@ -2708,27 +2517,27 @@ def _qualify_forms(block: str, in_cte: bool) -> tuple[str, str] | None:
     and in the predicate verdict collapse exactly like the
     qualify-then-distinct order does) because the filter pins the
     helper to TRUE before it is projected away."""
-    qpos = _find_toplevel_keyword(block, "QUALIFY")
+    qpos = sqltext.find_keyword(block, "QUALIFY")
     if qpos < 0:
         return None
     tail = block[qpos + len("QUALIFY") :]
     cut = len(tail)
     for kw in ("ORDER", "LIMIT"):
-        k = _find_toplevel_keyword(tail, kw)
+        k = sqltext.find_keyword(tail, kw)
         if k >= 0:
             cut = min(cut, k)
     pred, suffix = tail[:cut].strip(), tail[cut:].strip()
     if not pred:
         raise ValueError("QUALIFY clause present but empty")
     head = block[:qpos]
-    selects = _find_toplevel_all(head, "SELECT")
+    selects = sqltext.keyword_positions(head, "SELECT")
     if not selects:
         raise ValueError("QUALIFY without a top-level SELECT")
     spos = selects[-1]
     after_sel = spos + len("SELECT")
     dm = re.match(r"\s*DISTINCT\b", head[after_sel:], re.IGNORECASE)
     distinct = dm is not None
-    frel = _find_toplevel_keyword(head[spos:], "FROM")
+    frel = sqltext.find_keyword(head[spos:], "FROM")
     if frel < 0:
         raise ValueError("QUALIFY requires the SELECT to have a FROM clause")
     fpos = spos + frel
@@ -2760,7 +2569,7 @@ def _split_setop_branches(block: str) -> tuple[list[str], list[str], str] | None
     one), so it must stay OUTSIDE any per-branch rewrite."""
     marks: list[tuple[int, str]] = []
     for op in _SETOPS:
-        for p in _find_toplevel_all(block, op):
+        for p in sqltext.keyword_positions(block, op):
             # a set operator's right operand is a query term — require
             # SELECT / ( after the optional quantifier, which keeps
             # Spark's `* EXCEPT (col)` projection syntax from reading
@@ -2791,7 +2600,7 @@ def _split_setop_branches(block: str) -> tuple[list[str], list[str], str] | None
     # global tail: earliest top-level ORDER / LIMIT in the last branch
     cut = len(rest)
     for kw in ("ORDER", "LIMIT"):
-        k = _find_toplevel_keyword(rest, kw)
+        k = sqltext.find_keyword(rest, kw)
         if k >= 0:
             cut = min(cut, k)
     branches.append(rest[:cut])
@@ -2845,32 +2654,22 @@ def _qualify_block_forms(block: str, in_cte: bool) -> tuple[str, str] | None:
 def _cte_body_spans(statement: str) -> list[tuple[int, int]]:
     """(start, end) spans of the INNER text of each top-level CTE
     body — every balanced paren group directly following a top-level
-    ``AS`` in a WITH statement. Quote-aware; nested CTEs sit at
-    depth > 0 and are handled by recursion on the body text."""
-    if _find_toplevel_keyword(statement, "WITH") != 0 and not re.match(
+    ``AS`` in a WITH statement. Nested CTEs sit inside parens and are
+    handled by recursion on the body text."""
+    if sqltext.find_keyword(statement, "WITH") != 0 and not re.match(
         r"\s*WITH\b", statement, re.IGNORECASE
     ):
         return []
     spans: list[tuple[int, int]] = []
-    for apos in _find_toplevel_all(statement, "AS"):
+    for apos in sqltext.keyword_positions(statement, "AS"):
         j = apos + 2
         while j < len(statement) and statement[j].isspace():
             j += 1
         if j >= len(statement) or statement[j] != "(":
             continue
-        depth, in_quote = 0, False
-        for k in range(j, len(statement)):
-            ch = statement[k]
-            if ch == "'":
-                in_quote = not in_quote
-            elif not in_quote:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        spans.append((j + 1, k))
-                        break
+        k = sqltext.close_paren(statement, j)
+        if k >= 0:
+            spans.append((j + 1, k))
     return spans
 
 
@@ -3008,7 +2807,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
 
     if verb == "OPTIMIZE":
         om = _OPTIMIZE_RE.match(statement)
-        if om and cow.is_cow_table(spark, _resolve_target(spark, om.group(1))):
+        path = _cow_target(spark, om)
+        if path is not None:
             cols = (
                 [c.strip().strip("`") for c in om.group(5).split(",") if c.strip()]
                 if om.group(5)
@@ -3018,7 +2818,7 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 spark,
                 cow.compact(
                     spark,
-                    _resolve_target(spark, om.group(1)),
+                    path,
                     target_files=int(om.group(3)) if om.group(3) else 8,
                     cluster_by=cols,
                     zorder=bool(om.group(4)) and om.group(4).upper() == "ZORDER",
@@ -3027,7 +2827,8 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
             )
     elif verb == "VACUUM":
         vm = _VACUUM_RE.match(statement)
-        if vm and cow.is_cow_table(spark, _resolve_target(spark, vm.group(1))):
+        path = _cow_target(spark, vm)
+        if path is not None:
             if vm.group(3):
                 # DRY RUN returns the itemized reclaim listing (r13,
                 # Delta parity): every file/DV/manifest/shard the real
@@ -3035,7 +2836,7 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 # the SAME planning pass the real run executes
                 items = cow.vacuum_report(
                     spark,
-                    _resolve_target(spark, vm.group(1)),
+                    path,
                     keep_last=int(vm.group(2)) if vm.group(2) else 1,
                 )
                 return spark.createDataFrame(
@@ -3052,21 +2853,23 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 )
             removed = cow.vacuum(
                 spark,
-                _resolve_target(spark, vm.group(1)),
+                path,
                 keep_last=int(vm.group(2)) if vm.group(2) else 1,
             )
             return spark.createDataFrame([(removed,)], "files_removed long")
     elif verb == "DESCRIBE":
         hm = _HISTORY_RE.match(statement)
-        if hm and cow.is_cow_table(spark, _resolve_target(spark, hm.group(1))):
-            rows = cow.history(spark, _resolve_target(spark, hm.group(1)))
+        path = _cow_target(spark, hm)
+        if path is not None:
+            rows = cow.history(spark, path)
             return spark.createDataFrame(
                 [(r["snapshot_id"], r["operation"], r["n_files"], r["n_rows"]) for r in rows],
                 "snapshot_id long, operation string, n_files long, n_rows long",
             )
         dd = _DETAIL_RE.match(statement)
-        if dd and cow.is_cow_table(spark, _resolve_target(spark, dd.group(1))):
-            d = cow.describe_detail(spark, _resolve_target(spark, dd.group(1)))
+        path = _cow_target(spark, dd)
+        if path is not None:
+            d = cow.describe_detail(spark, path)
             d = {
                 k: (",".join(v) if isinstance(v, list) else v)
                 for k, v in d.items()
@@ -3080,13 +2883,13 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
         if sc_:
             return _show_create_table(spark, sc_.group(1))
         sp_ = _SHOW_PARTITIONS_RE.match(statement)
-        if sp_ and cow.is_cow_table(spark, _resolve_target(spark, sp_.group(1))):
+        p_ = _cow_target(spark, sp_)
+        if p_ is not None:
             # distinct LIVE partition value tuples from manifest
             # entries — metadata-only, like Spark's SHOW PARTITIONS.
             # Mixed spec vintages (partition evolution) surface their
             # own recorded keys; an unpartitioned table refuses like
             # Spark does.
-            p_ = _resolve_target(spark, sp_.group(1))
             m_ = cow.table_head_meta(spark, p_)
             pby = m_.get("partition_by") or []
             if not pby and not (m_.get("partition_specs") or []):
@@ -3108,8 +2911,9 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
                 [(s,) for s in seen], "partition string"
             )
         st_ = _SHOW_TAGS_RE.match(statement)
-        if st_ and cow.is_cow_table(spark, _resolve_target(spark, st_.group(1))):
-            t = cow.tags(spark, _resolve_target(spark, st_.group(1)))
+        path = _cow_target(spark, st_)
+        if path is not None:
+            t = cow.tags(spark, path)
             return spark.createDataFrame(
                 sorted(t.items()), "tag string, snapshot_id long"
             )
@@ -3172,19 +2976,20 @@ def _cow_maintenance(spark: SparkSession, verb: str, statement: str) -> DataFram
             return spark.createDataFrame([(snap,)], "snapshot_id long")
     elif verb == "REORG":
         rm = _REORG_RE.match(statement)
-        if rm and cow.is_cow_table(spark, _resolve_target(spark, rm.group(1))):
+        path = _cow_target(spark, rm)
+        if path is not None:
             return _stats_df(
                 spark,
                 cow.reorg_purge(
                     spark,
-                    _resolve_target(spark, rm.group(1)),
+                    path,
                     min_dv_ratio=float(rm.group(2)) if rm.group(2) else 0.0,
                 ),
             )
     elif verb == "RESTORE":
         sm = _RESTORE_RE.match(statement)
-        if sm and cow.is_cow_table(spark, _resolve_target(spark, sm.group(1))):
-            path = _resolve_target(spark, sm.group(1))
+        path = _cow_target(spark, sm)
+        if path is not None:
             if sm.group(2) is not None:
                 target = int(sm.group(2))
             elif sm.group(3) is not None:

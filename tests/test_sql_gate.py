@@ -216,6 +216,64 @@ def test_dml_with_hostile_quoted_literals(spark, tmp_path):
     assert {r["k"] for r in cow.read(spark, path).collect()} == {3, 4}
 
 
+_MERGE_SRC = "(SELECT CAST(2 AS BIGINT) AS k, CAST(7 AS BIGINT) AS v, 'm' AS s) s"
+_MERGE_TAIL = "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+
+
+@pytest.mark.parametrize(
+    "statement, plain",
+    [
+        pytest.param(
+            "UPDATE {t} SET v = 9 -- it's a fix\nWHERE k = 1",
+            "UPDATE {t} SET v = 9 WHERE k = 1",
+            id="update-line-comment",
+        ),
+        pytest.param(
+            "DELETE FROM {t} -- drop Bob's row\nWHERE k = 2",
+            "DELETE FROM {t} WHERE k = 2",
+            id="delete-line-comment",
+        ),
+        pytest.param(
+            "UPDATE {t} SET s = 'x' /* don't */ WHERE k = 3",
+            "UPDATE {t} SET s = 'x' WHERE k = 3",
+            id="update-block-comment",
+        ),
+        pytest.param(
+            f"MERGE INTO {{t}} t USING {_MERGE_SRC} -- it's\n{_MERGE_TAIL}",
+            f"MERGE INTO {{t}} t USING {_MERGE_SRC} {_MERGE_TAIL}",
+            id="merge-line-comment",
+        ),
+        pytest.param(
+            "SELECT COUNT(*) FROM -- Bob's\n {t}",
+            "SELECT COUNT(*) FROM {t}",
+            id="select-line-comment",
+        ),
+        pytest.param(
+            'UPDATE {t} SET s = "x, y", v = 0 WHERE k = 1',
+            "UPDATE {t} SET s = 'x, y', v = 0 WHERE k = 1",
+            id="update-double-quoted-comma",
+        ),
+    ],
+)
+def test_comments_and_double_quotes_do_not_change_the_statement(
+    spark, tmp_path, statement, plain
+):
+    """A quote inside a comment opens no literal, and a comma inside a
+    double-quoted literal splits nothing: each statement gives the
+    same result and table rows as its plain twin."""
+    from data_warehouse_solution_spark import cowtable as cow
+
+    rows = [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")]
+    got = []
+    for name, stmt in (("commented", statement), ("plain", plain)):
+        path = str(tmp_path / name)
+        cow.create(spark, path, spark.createDataFrame(rows, "k long, v long, s string"))
+        result = run_sql(spark, stmt.format(t=f"cow.`{path}`")).collect()
+        table = cow.read(spark, path).collect()
+        got.append((sorted(map(tuple, result)), sorted(map(tuple, table))))
+    assert got[0] == got[1]
+
+
 def test_insert_into_cow_table_through_gate(spark, tmp_path):
     """The reference's most-emitted verb (pipeline.py:160-162) must
     execute on snapshot tables: VALUES and SELECT payloads, explicit
