@@ -23,6 +23,14 @@ in the environment — no extra jars:
   ``incremental.refresh_daily_revenue``, documented rather than
   hidden. Losers of a concurrent commit raise
   ``CowConcurrentWrite`` (optimistic concurrency).
+- Every verb builds its snapshot with ``_child`` (id, parent,
+  operation, the carried table keys, the writers' ``txns`` replay
+  map) and publishes it through ``_commit``: the file list is carried
+  from the parent, the parent's plus appended entries, or an explicit
+  list (``_attach_files``), and every snapshot is stamped with its
+  file and row counts. ``_publish`` is the engine's one rename; the
+  Python-source writers (``sources/_staging.commit``) build the same
+  manifest with the same helpers and publish with ``os.link``.
 
 Affected-file selection prunes twice before touching data: the
 manifest keeps per-file min/max stats for numeric and string columns
@@ -41,10 +49,11 @@ files and the planning cost to the stat-surviving candidates, not
 the table — the entire point of COW.
 
 Manifest scalability: beyond ``MANIFEST_SHARD_ROWS`` file entries a
-snapshot's file list is sharded into side ``manifest-N-files-K.json``
-files (the Iceberg manifest-list move) and the manifest proper holds
-only their names, so no single JSON grows with the table; the atomic
-rename of the manifest proper remains the one commit point.
+snapshot's file list is sharded into content-addressed side
+``manifest-files-<hash>.json`` files (the Iceberg manifest-list move)
+and the manifest proper holds only their names, so no single JSON
+grows with the table; the atomic rename of the manifest proper
+remains the one commit point.
 ``compact(cluster_by=...)`` keeps the file COUNT bounded and makes
 the stats a range index; ``changes()`` exposes the row-level delta
 between snapshots (CDC) at O(changed files) cost.
@@ -237,9 +246,9 @@ def _read_shard(spark: SparkSession, path: str) -> list:
 # path. A manifest path is write-once while the table lives (tmp +
 # atomic rename, exists-checked), so path -> bytes is stable; the
 # cache is seeded at _publish (the committer never re-reads its own
-# commit) and consulted by every manifest-proper load — the txn-carry
-# parent read, _load_manifest_meta, _load_manifest, snapshot_as_of —
-# which were each a py4j exists + open/read/close round per call.
+# commit) and consulted by every manifest-proper load —
+# _load_manifest_meta, _load_manifest, snapshot_as_of — which were
+# each a py4j exists + open/read/close round per call.
 # Invalidation: create()/drop() purge the table's prefix (a dropped or
 # rmtree'd-and-recreated path restarts snapshot numbering with new
 # content), and vacuum evicts each manifest it deletes. Bytes, not
@@ -307,42 +316,36 @@ def _load_manifest(spark: SparkSession, table_path: str, n: int) -> dict:
 
 
 def _shard_groups(
-    spark: SparkSession, table_path: str, parent: int | None, files: list[dict]
+    base: dict | None, files: list[dict], read
 ) -> list[tuple[list[dict], str | None]]:
-    """Regroup ``files`` by the PARENT snapshot's shard membership:
-    entries keep their parent group; entries new to this commit form
-    trailing SHARD_ROWS-sized groups of their own (Iceberg's
-    append-group model). Returns ``(entries, reuse_name)`` per final
-    group — ``reuse_name`` is the parent shard to reference verbatim
-    (zero write) when the group survived byte-identical. Small
-    consecutive groups (< SHARD_ROWS // 2) coalesce once their run
-    reaches half a shard, bounding shard count at ~2× the ideal
-    without ever dirtying a full, untouched shard — so a
-    metadata-only commit reuses every name and writes nothing."""
-    groups: list[tuple[list[dict], str | None]] = []  # (entries, parent shard)
+    """Regroup ``files`` by the BASE (parent) snapshot's shard
+    membership: entries keep their parent group; entries new to this
+    commit form trailing SHARD_ROWS-sized groups of their own
+    (Iceberg's append-group model). Returns ``(entries, reuse_name)``
+    per final group — ``reuse_name`` is the parent shard to reference
+    verbatim (zero write) when the group survived byte-identical.
+    Small consecutive groups (< SHARD_ROWS // 2) coalesce once their
+    run reaches half a shard, bounding shard count at ~2× the ideal
+    without ever dirtying a full, untouched shard. ``read(name)``
+    loads one of the base's shards."""
     entry_group: dict[str, int] = {}
     parent_names: list[str | None] = []
     parent_entries: list[list[dict]] = []
-    if parent is not None:
-        try:
-            blob = _manifest_bytes(spark, _manifest_path(table_path, parent))
-            pm = json.loads(blob.decode()) if blob is not None else {}
-        except Exception:
-            pm = {}
-        if pm.get("file_shards"):
-            for sname in pm["file_shards"]:
-                ents = _read_shard(spark, f"{table_path}/{MANIFEST_DIR}/{sname}")
+    if base is not None:
+        if base.get("file_shards"):
+            for sname in base["file_shards"]:
+                ents = read(sname)
                 gi = len(parent_names)
                 parent_names.append(sname)
                 parent_entries.append(ents)
                 for e in ents:
                     entry_group.setdefault(e["name"], gi)
-        elif pm.get("files"):
+        elif base.get("files"):
             # inline parent crossing the shard threshold: its entries
             # form group 0, but there is no disk shard to reuse
             parent_names.append(None)
-            parent_entries.append(pm["files"])
-            for e in pm["files"]:
+            parent_entries.append(base["files"])
+            for e in base["files"]:
                 entry_group.setdefault(e["name"], 0)
     buckets: list[list[dict]] = [[] for _ in parent_names]
     fresh: list[dict] = []
@@ -394,98 +397,138 @@ def _shard_groups(
     return out
 
 
-def _commit(spark: SparkSession, table_path: str, manifest: dict) -> int:
-    """Optimistic commit of snapshot ``manifest['snapshot_id']``.
-    Large file lists are sharded out first (see MANIFEST_SHARD_ROWS)
-    via content-addressed shard REUSE — only groups whose entries
-    changed are written, so commit metadata I/O is O(changed files),
-    not O(table files), and metadata-only commits write zero shards.
-    The atomic rename of the manifest proper remains the single commit
-    point; a lost race orphans at most its newly-written content
-    shards, which are harmless (immutable, unreferenced) and reclaimed
-    by vacuum's ref-count + age guard — never deleted here, because a
-    content name the loser wrote may simultaneously be referenced by
-    the WINNER (two committers deriving an identical surviving group
-    produce the same name), and deleting it would corrupt the winner's
-    published snapshot."""
-    n = manifest["snapshot_id"]
-    fs, _ = _fs(spark, table_path)
-    final = _jpath(spark, _manifest_path(table_path, n))
-    if fs.exists(final):
-        raise CowConcurrentWrite(f"snapshot {n} already committed at {table_path}")
-    # idempotent-writer txn map (Delta's SetTransaction): every commit
-    # carries the parent's {app_id: last_version} map forward, so the
-    # replay evidence appends record is durable through ANY later verb
-    # (delete/update/compact/...) and through vacuum (the head always
-    # holds the merged map). append() adds its own entry before
-    # calling; other verbs inherit here.
-    if "txns" not in manifest and manifest.get("parent"):
-        try:
-            blob = _manifest_bytes(
-                spark, _manifest_path(table_path, manifest["parent"])
-            )
-            parent = json.loads(blob.decode()) if blob is not None else {}
-            if parent.get("txns"):
-                manifest["txns"] = parent["txns"]
-        except Exception:
-            pass  # parent expired mid-read: txn map starts fresh
-    files = manifest.get("files") or []
-    # O(1) arity/cardinality for meta-only readers (r12 n_files; r13
-    # n_rows/n_rows_live) — what lets history()/DESCRIBE DETAIL on a
-    # 50k-commit streaming table read manifest PROPERS only, never
-    # expanding a single file shard
-    manifest["n_files"] = len(files)
-    manifest["n_rows"] = sum(f["rows"] for f in files)
-    manifest["n_rows_live"] = sum(
-        f["rows"] - ((f.get("dv") or {}).get("count") or 0) for f in files
-    )
-    if len(files) > MANIFEST_SHARD_ROWS:
-        manifest = {k: v for k, v in manifest.items() if k != "files"}
-        names = []
-        for ents, reuse in _shard_groups(
-            spark, table_path, manifest.get("parent"), files
-        ):
-            if reuse is not None:
-                names.append(reuse)  # unchanged group: zero I/O
-                continue
-            names.append(
-                _write_content_shard(spark, fs, table_path, json.dumps(ents).encode())
-            )
-        manifest["file_shards"] = names
-    return _publish(spark, fs, table_path, manifest, final)
+def _counts(files: list[dict]) -> dict:
+    """The ``n_files`` / ``n_rows`` / ``n_rows_live`` stamps of a file
+    list (live = physical minus deletion-vector masks)."""
+    return {
+        "n_files": len(files),
+        "n_rows": sum(f["rows"] for f in files),
+        "n_rows_live": sum(
+            f["rows"] - ((f.get("dv") or {}).get("count") or 0) for f in files
+        ),
+    }
 
 
-def _commit_carry(
-    spark: SparkSession, table_path: str, pm: dict, manifest: dict
+def _stamps(m: dict, read) -> dict:
+    """``m``'s ``n_files`` / ``n_rows`` / ``n_rows_live``: its
+    commit-time stamps (zero shard reads), else counted from its
+    entries — legacy manifests predate the stamps. ``read(name)``
+    loads one of its shards."""
+    if m.get("n_files") is not None and m.get("n_rows") is not None:
+        return {
+            "n_files": int(m["n_files"]),
+            "n_rows": int(m["n_rows"]),
+            "n_rows_live": int(m.get("n_rows_live", m["n_rows"])),
+        }
+    if "files" in m:
+        return _counts(m["files"])
+    return _counts([e for s in m.get("file_shards") or [] for e in read(s)])
+
+
+def _shard_name(blob: bytes) -> str:
+    """Content address of a shard blob: identical entries, identical
+    name (a shard file is therefore immutable and shareable)."""
+    return f"manifest-files-{hashlib.sha256(blob).hexdigest()[:16]}.json"
+
+
+def _attach_files(
+    manifest: dict, base: dict | None, append, read, write
+) -> dict:
+    """The child ``manifest`` as it publishes: its file list plus the
+    ``n_files`` / ``n_rows`` / ``n_rows_live`` stamps that let
+    ``history()`` / DESCRIBE DETAIL read manifest PROPERS only. The
+    file list comes in one of three forms:
+
+    - **explicit** — ``manifest["files"]``: past MANIFEST_SHARD_ROWS
+      it is regrouped by the base's shard membership
+      (``_shard_groups``), so only changed groups are written and a
+      commit's metadata I/O is O(changed files);
+    - **carried** — no ``files`` and no ``append``: a sharded base's
+      shard NAMES are referenced verbatim (O(1): zero shard reads,
+      zero writes at any table size — what every metadata-only commit
+      takes);
+    - **appended** — no ``files``, ``append`` entries: the base's
+      shard names plus new shards for the entries; only a trailing
+      sub-half shard is read and merged, so repeated small appends
+      cannot grow the shard count without bound. A 1-row INSERT into
+      a 1M-file table is a ~KB metadata read and write.
+
+    An inline base turns the carried and appended forms into an
+    explicit list (the small-table cost IS O(inline) and the explicit
+    path handles the threshold crossing). Stamps come from the base's
+    stamps when it has them, else from its entries (legacy or
+    unstamped heads — the next commit is stamped again).
+
+    Pure: ``read(name)`` returns one shard's entries and
+    ``write(blob)`` publishes one content shard and returns its name,
+    so the engine (Hadoop FS, ``_commit``) and the Python-source
+    writers (local files, ``sources/_staging.commit``) share every
+    rule here."""
+    out = dict(manifest)
+    append = list(append or [])
+    rows = MANIFEST_SHARD_ROWS
+    shards = None if "files" in out else base.get("file_shards")
+    if shards is None:
+        files = out.pop("files", None)
+        if files is None:
+            files = list(base.get("files") or []) + append
+        out.update(_counts(files))
+        if len(files) > rows:
+            out["file_shards"] = [
+                reuse or write(json.dumps(ents).encode())
+                for ents, reuse in _shard_groups(base, files, read)
+            ]
+        else:
+            out["files"] = files
+        return out
+    names = list(shards)
+    tail = append
+    if tail and names:
+        last = read(names[-1])
+        if len(last) < rows // 2 and len(last) + len(tail) <= rows:
+            tail = last + tail
+            names.pop()
+    names += [
+        write(json.dumps(tail[k : k + rows]).encode())
+        for k in range(0, len(tail), rows)
+    ]
+    out["file_shards"] = names
+    have, added = _stamps(base, read), _counts(append)
+    out.update({k: have[k] + added[k] for k in have})
+    return out
+
+
+def _commit(
+    spark: SparkSession, table_path: str, manifest: dict, base: dict | None,
+    append: list[dict] | None = None,
 ) -> int:
-    """METADATA-ONLY commit fast path (r13): the child references the
-    parent's file list VERBATIM — sharded parents by shard NAME,
-    inline parents by list copy — so a tag / write-mode / DEFAULT /
-    constraint commit is O(1) metadata work at ANY table size. The
-    general ``_commit`` regroups the full file list even when every
-    group is reused (O(table files) driver CPU); a commit that by
-    construction changes no file entry has no reason to ever expand
-    them. ``pm`` is the parent manifest PROPER (``_load_manifest_meta``
-    — file_shards unexpanded)."""
+    """Optimistic commit of snapshot ``manifest['snapshot_id']`` (a
+    ``_child`` of ``base``; ``base`` is None only for a table's first
+    snapshot) — the engine's one way to publish. The file list takes
+    one of ``_attach_files``'s three forms: explicit
+    ``manifest["files"]``, the base's list carried verbatim, or the
+    base's list plus ``append`` entries. The atomic rename of the
+    manifest proper (``_publish``) remains the single commit point; a
+    lost race orphans at most its newly-written content shards, which
+    are harmless (immutable, unreferenced) and reclaimed by vacuum's
+    ref-count + age guard — never deleted here, because a content name
+    the loser wrote may simultaneously be referenced by the WINNER (two
+    committers deriving an identical surviving group produce the same
+    name), and deleting it would corrupt the winner's published
+    snapshot. ``manifest`` itself is not modified."""
     n = manifest["snapshot_id"]
     fs, _ = _fs(spark, table_path)
     final = _jpath(spark, _manifest_path(table_path, n))
     if fs.exists(final):
         raise CowConcurrentWrite(f"snapshot {n} already committed at {table_path}")
-    if "txns" not in manifest and pm.get("txns"):
-        manifest["txns"] = pm["txns"]
-    # a FULL-loaded parent carries both file_shards and the expanded
-    # files list — reference the shards by name, never inline the list
-    if "file_shards" in pm:
-        manifest["file_shards"] = pm["file_shards"]
-    else:
-        manifest["files"] = list(pm.get("files") or [])
-    for k in ("n_files", "n_rows", "n_rows_live"):
-        if k in pm:
-            manifest[k] = pm[k]
-    if "n_files" not in manifest:
-        manifest["n_files"] = _n_files(spark, table_path, pm)
-    return _publish(spark, fs, table_path, manifest, final)
+    out = _attach_files(
+        manifest,
+        base,
+        append,
+        lambda name: _read_shard(spark, f"{table_path}/{MANIFEST_DIR}/{name}"),
+        lambda blob: _write_content_shard(spark, fs, table_path, blob),
+    )
+    return _publish(spark, fs, table_path, out, final)
 
 
 def _write_content_shard(spark: SparkSession, fs, table_path: str, blob: bytes) -> str:
@@ -494,7 +537,7 @@ def _write_content_shard(spark: SparkSession, fs, table_path: str, blob: bytes) 
     tmp + rename so a concurrent committer deriving the SAME content
     never interleaves writes on the final path; if the rename loses,
     the file exists with these exact bytes."""
-    name = f"manifest-files-{hashlib.sha256(blob).hexdigest()[:16]}.json"
+    name = _shard_name(blob)
     spath = f"{table_path}/{MANIFEST_DIR}/{name}"
     sjp = _jpath(spark, spath)
     if not fs.exists(sjp):
@@ -567,66 +610,6 @@ def _n_files(spark: SparkSession, table_path: str, meta: dict) -> int:
             for s in meta["file_shards"]
         )
     return len(meta.get("files") or [])
-
-
-def _commit_append(
-    spark: SparkSession, table_path: str, parent_meta: dict, manifest: dict,
-    entries: list[dict],
-) -> int:
-    """APPEND fast path (r12): commit ``parent ∪ entries`` with
-    O(new files) metadata I/O — the parent's shards are referenced BY
-    NAME from its manifest proper (never loaded, never rewritten);
-    only the trailing small shard, if any, is read (cached) and
-    merged so streaming sinks can't grow the shard count unboundedly
-    (at most one sub-half shard trails, same bound as
-    ``_shard_groups``'s coalescing). This is what makes a
-    1-row INSERT into a 1M-file table a ~KB metadata write AND read:
-    the general ``_commit`` path is O(changed) on writes but still
-    parses the full parent list to regroup; appends provably change
-    nothing, so they skip the regroup entirely."""
-    pm = parent_meta
-    if "file_shards" not in pm:
-        # inline parent: small table — the general path's cost IS
-        # O(new + inline) and it handles the threshold crossing
-        manifest["files"] = list(pm.get("files") or []) + list(entries)
-        return _commit(spark, table_path, manifest)
-    n = manifest["snapshot_id"]
-    fs, _ = _fs(spark, table_path)
-    final = _jpath(spark, _manifest_path(table_path, n))
-    if fs.exists(final):
-        raise CowConcurrentWrite(f"snapshot {n} already committed at {table_path}")
-    if "txns" not in manifest and pm.get("txns"):
-        manifest["txns"] = pm["txns"]
-    names = list(pm["file_shards"])
-    tail: list[dict] = list(entries)
-    if names:
-        last = _read_shard(spark, f"{table_path}/{MANIFEST_DIR}/{names[-1]}")
-        if (
-            len(last) < MANIFEST_SHARD_ROWS // 2
-            and len(last) + len(tail) <= MANIFEST_SHARD_ROWS
-        ):
-            tail = last + tail
-            names.pop()
-    for k in range(0, len(tail), MANIFEST_SHARD_ROWS):
-        names.append(
-            _write_content_shard(
-                spark, fs, table_path,
-                json.dumps(tail[k : k + MANIFEST_SHARD_ROWS]).encode(),
-            )
-        )
-    manifest.pop("files", None)
-    manifest["file_shards"] = names
-    manifest["n_files"] = _n_files(spark, table_path, pm) + len(entries)
-    # appended entries carry no DVs, so both counts advance by the
-    # same delta; a legacy parent without stamps stays unstamped
-    # (history falls back to expansion for those snapshots only)
-    if pm.get("n_rows") is not None:
-        new_rows = sum(e["rows"] for e in entries)
-        manifest["n_rows"] = int(pm["n_rows"]) + new_rows
-        manifest["n_rows_live"] = (
-            int(pm.get("n_rows_live", pm["n_rows"])) + new_rows
-        )
-    return _publish(spark, fs, table_path, manifest, final)
 
 
 _STATS_TYPES = (
@@ -1683,42 +1666,61 @@ def _read_files(
     return out
 
 
+# manifest keys a child inherits only when set (``_carried``)
+_OPTIONAL_KEYS = (
+    "write_mode", "physical_names", "used_physical", "generated_columns",
+    "bucket_by", "widened_columns", "partition_specs", "tags",
+    "column_defaults", "identity_columns",
+    # COPY INTO's loaded-file registry (content-addressed shard names,
+    # append-only) — carried so idempotency survives every later verb;
+    # vacuum ref-counts these names like file_shards
+    "copy_shards",
+)
+# keys a manifest holds even when empty: an empty override keeps them
+_KEPT_WHEN_EMPTY = (
+    "schema", "partition_by", "bloom_columns", "check_constraints",
+    "default_spec_id", "files",
+)
+
+
 def _carried(m: dict) -> dict:
-    """Manifest keys every child commit inherits verbatim (callers
-    override individual keys after the splat where the commit changes
-    them — e.g. ``alter_drop_column`` narrows the schema)."""
+    """Manifest keys every child commit inherits verbatim (``_child``
+    overrides the ones a commit changes — e.g. ``alter_drop_column``
+    narrows the schema)."""
     out = {
         "schema": m["schema"],
         "partition_by": m.get("partition_by") or [],
         "bloom_columns": m.get("bloom_columns") or [],
         "check_constraints": m.get("check_constraints") or {},
     }
-    if m.get("write_mode"):
-        out["write_mode"] = m["write_mode"]
-    if m.get("physical_names"):
-        out["physical_names"] = m["physical_names"]
-    if m.get("used_physical"):
-        out["used_physical"] = m["used_physical"]
-    if m.get("generated_columns"):
-        out["generated_columns"] = m["generated_columns"]
-    if m.get("bucket_by"):
-        out["bucket_by"] = m["bucket_by"]
-    if m.get("widened_columns"):
-        out["widened_columns"] = m["widened_columns"]
+    out.update((k, m[k]) for k in _OPTIONAL_KEYS if m.get(k))
     if m.get("partition_specs"):
-        out["partition_specs"] = m["partition_specs"]
         out["default_spec_id"] = m.get("default_spec_id", 0)
-    if m.get("tags"):
-        out["tags"] = m["tags"]
-    if m.get("column_defaults"):
-        out["column_defaults"] = m["column_defaults"]
-    if m.get("identity_columns"):
-        out["identity_columns"] = m["identity_columns"]
-    if m.get("copy_shards"):
-        # COPY INTO's loaded-file registry (content-addressed shard
-        # names, append-only) — carried so idempotency survives every
-        # later verb; vacuum ref-counts these names like file_shards
-        out["copy_shards"] = m["copy_shards"]
+    return out
+
+
+def _child(base: dict, operation: str, **changes) -> dict:
+    """Every child manifest of ``base`` is made here: snapshot id,
+    parent and operation, every key ``_carried`` inherits, and the
+    parent's ``txns`` map (Delta's SetTransaction: the idempotent
+    writers' replay evidence survives every later verb and vacuum,
+    because the head always holds the merged map). ``changes``
+    override keys; a falsy override drops an optional key (an empty
+    value of a ``_KEPT_WHEN_EMPTY`` key is kept). Without ``files``
+    the child carries the base's file list — see ``_commit``."""
+    out = {
+        "snapshot_id": base["snapshot_id"] + 1,
+        "parent": base["snapshot_id"],
+        "operation": operation,
+        **_carried(base),
+    }
+    if base.get("txns"):
+        out["txns"] = base["txns"]
+    for k, v in changes.items():
+        if v or (v is not None and k in _KEPT_WHEN_EMPTY):
+            out[k] = v
+        else:
+            out.pop(k, None)
     return out
 
 
@@ -2054,7 +2056,11 @@ def create(
         # VERSION AS OF '<tag>' and let vacuum delete tagged
         # snapshots' files while their manifests remain readable.
         manifest["tags"] = _replace_head["tags"]
-    return _commit(spark, table_path, manifest)
+    if _replace_head is not None and _replace_head.get("txns"):
+        # the idempotent writers' replay evidence outlives a REPLACE
+        # like every other commit (see _child)
+        manifest["txns"] = _replace_head["txns"]
+    return _commit(spark, table_path, manifest, _replace_head)
 
 
 def create_like(spark: SparkSession, table_path: str, source_path: str) -> int:
@@ -2287,14 +2293,8 @@ def alter_set_write_mode(spark: SparkSession, table_path: str, write_mode: str) 
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     if (m.get("write_mode") or "cow") == write_mode:
         return m["snapshot_id"]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"set_write_mode_{write_mode}",
-        **_carried(m),
-        "write_mode": write_mode,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(m, f"set_write_mode_{write_mode}", write_mode=write_mode)
+    return _commit(spark, table_path, manifest, m)
 
 
 def alter_set_column_default(
@@ -2317,14 +2317,8 @@ def alter_set_column_default(
     _validate_column_defaults(
         spark, _snapshot_schema(m), m.get("generated_columns"), {col: expr}
     )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"set_default_{col}",
-        **_carried(m),
-        "column_defaults": defaults,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(m, f"set_default_{col}", column_defaults=defaults)
+    return _commit(spark, table_path, manifest, m)
 
 
 def alter_drop_column_default(
@@ -2340,16 +2334,8 @@ def alter_drop_column_default(
             f"columns: {sorted(defaults) or '(none)'}"
         )
     del defaults[col]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_default_{col}",
-        **_carried(m),
-    }
-    manifest.pop("column_defaults", None)
-    if defaults:
-        manifest["column_defaults"] = defaults
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(m, f"drop_default_{col}", column_defaults=defaults)
+    return _commit(spark, table_path, manifest, m)
 
 
 _TAG_NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_.\-]*$")
@@ -2401,14 +2387,7 @@ def create_tag(
     if tags.get(name) == target:
         return m["snapshot_id"]  # no-op never burns a snapshot
     tags[name] = target
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"create_tag_{name}",
-        **_carried(m),
-        "tags": tags,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit(spark, table_path, _child(m, f"create_tag_{name}", tags=tags), m)
 
 
 def drop_tag(spark: SparkSession, table_path: str, name: str) -> int:
@@ -2423,14 +2402,7 @@ def drop_tag(spark: SparkSession, table_path: str, name: str) -> int:
             f"{sorted(tags) or '(none)'}"
         )
     del tags[name]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_tag_{name}",
-        **_carried(m),
-        "tags": tags,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit(spark, table_path, _child(m, f"drop_tag_{name}", tags=tags), m)
 
 
 def tags(spark: SparkSession, table_path: str) -> dict[str, int]:
@@ -2551,7 +2523,7 @@ def shallow_clone(
             "files": m["files"],
         }
         manifest.pop("tags", None)
-        return _commit(spark, table_path, manifest)
+        return _commit(spark, table_path, manifest, None)
     except BaseException:
         # a failed link or commit must not strand a half-built clone:
         # remove the destination so a retry starts clean (the table
@@ -2732,7 +2704,7 @@ def convert_to_cow(
         "files": entries,
         "used_physical": [f.name for f in df.schema.fields],
     }
-    return _commit(spark, table_path, manifest)
+    return _commit(spark, table_path, manifest, None)
 
 
 def read(spark: SparkSession, table_path: str, snapshot: int | None = None) -> DataFrame:
@@ -2976,13 +2948,7 @@ def alter_add_columns(spark: SparkSession, table_path: str, cols_ddl: str) -> in
     new_fields = StructType.fromDDL(cols_ddl).fields
     m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     _evolve_schema_inplace(m, new_fields)
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "add_column",
-        **_carried(m),
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    return _commit(spark, table_path, _child(m, "add_column"), m)
 
 
 def _evolve_schema_inplace(m: dict, new_fields) -> None:
@@ -3055,16 +3021,11 @@ def _evolve_partition_spec(
     else:
         new_id = max(s["spec_id"] for s in specs) + 1
         specs.append({"spec_id": new_id, "fields": list(new_fields)})
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "partition_by": list(new_fields),
-        "partition_specs": specs,
-        "default_spec_id": new_id,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(
+        m, operation, partition_by=list(new_fields), partition_specs=specs,
+        default_spec_id=new_id,
+    )
+    return _commit(spark, table_path, manifest, m)
 
 
 def alter_add_partition_field(
@@ -3141,24 +3102,10 @@ def _snapshot_counts(spark: SparkSession, table_path: str, m: dict) -> tuple:
     commit-time stamps when present (r12 n_files / r13 n_rows*; zero
     shard reads), expanding the file list only for legacy manifests
     that predate the stamps."""
-    if m.get("n_files") is not None and m.get("n_rows") is not None:
-        return (
-            int(m["n_files"]),
-            int(m["n_rows"]),
-            int(m.get("n_rows_live", m["n_rows"])),
-        )
-    full = (
-        _load_manifest(spark, table_path, m["snapshot_id"])
-        if "files" not in m
-        else m
-    )
-    return (
-        len(full["files"]),
-        sum(f["rows"] for f in full["files"]),
-        sum(
-            f["rows"] - ((f.get("dv") or {}).get("count") or 0)
-            for f in full["files"]
-        ),
+    return tuple(
+        _stamps(
+            m, lambda name: _read_shard(spark, f"{table_path}/{MANIFEST_DIR}/{name}")
+        ).values()
     )
 
 
@@ -3479,23 +3426,18 @@ def _rewrite_commit(
             fs.delete(_jpath(spark, f"{table_path}/{DATA_DIR}/{e['name']}"), False)
         raise
     untouched = [f for f in m["files"] if f["name"] not in affected]
-    manifest = {
-        "snapshot_id": snap,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "files": untouched + new_entries,
-    }
+    # a FULL rewrite (compact of every file) stages all surviving
+    # bytes under the current schema — no pre-widening vintage
+    # remains, so the raw-scan refusal marker lifts
+    manifest = _child(
+        m, operation, files=untouched + new_entries,
+        widened_columns=m.get("widened_columns") if untouched else None,
+    )
     _advance_identity(manifest, m, new_entries)
-    if not untouched and manifest.get("widened_columns"):
-        # a FULL rewrite (compact of every file): all surviving bytes
-        # were just staged under the current schema — no pre-widening
-        # vintage remains, so the raw-scan refusal marker lifts
-        manifest.pop("widened_columns", None)
     base = m
     for _attempt in range(6):
         try:
-            _commit(spark, table_path, manifest)
+            _commit(spark, table_path, manifest, base)
             stats = {
                 "snapshot_id": manifest["snapshot_id"],
                 "files_rewritten": len(affected),
@@ -3523,14 +3465,11 @@ def _rewrite_commit(
                     f"mark at {table_path}; re-run the statement"
                 )
             base = head
-            manifest = {
-                "snapshot_id": head["snapshot_id"] + 1,
-                "parent": head["snapshot_id"],
-                "operation": operation,
-                **_carried(head),
-                "files": [f for f in head["files"] if f["name"] not in affected]
+            manifest = _child(
+                head, operation,
+                files=[f for f in head["files"] if f["name"] not in affected]
                 + new_entries,
-            }
+            )
             _advance_identity(manifest, head, new_entries)
     raise CowConcurrentWrite(
         f"rebase retries exhausted under sustained contention at {table_path}"
@@ -3750,19 +3689,16 @@ def _mor_assemble_inner(
         e2["dv"] = {"name": dv_name, "count": total}
         ours.append(e2)
     base = m
-    manifest = {
-        "snapshot_id": snap,
-        "parent": m["snapshot_id"],
-        "operation": operation,
-        **_carried(m),
-        "files": [e for e in m["files"] if e["name"] not in affected_names]
+    manifest = _child(
+        m, operation,
+        files=[e for e in m["files"] if e["name"] not in affected_names]
         + ours
         + new_entries,
-    }
+    )
     _advance_identity(manifest, m, new_entries)
     for _attempt in range(6):
         try:
-            _commit(spark, table_path, manifest)
+            _commit(spark, table_path, manifest, base)
             stats = {
                 "snapshot_id": manifest["snapshot_id"],
                 "files_rewritten": 0,
@@ -3787,17 +3723,12 @@ def _mor_assemble_inner(
             if head is None:
                 raise
             base = head
-            manifest = {
-                "snapshot_id": head["snapshot_id"] + 1,
-                "parent": head["snapshot_id"],
-                "operation": operation,
-                **_carried(head),
-                "files": [
-                    e for e in head["files"] if e["name"] not in affected_names
-                ]
+            manifest = _child(
+                head, operation,
+                files=[e for e in head["files"] if e["name"] not in affected_names]
                 + ours
                 + new_entries,
-            }
+            )
     raise CowConcurrentWrite(
         f"rebase retries exhausted under sustained contention at {table_path}"
     )
@@ -4929,18 +4860,12 @@ def append(
             for e in new_entries:
                 fs.delete(_jpath(spark, f"{table_path}/data/{e['name']}"), False)
             return skip
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": "append",
-            **_carried(m),
-            "check_constraints": cur_checks,
-        }
+        manifest = _child(m, "append", check_constraints=cur_checks)
         _advance_identity(manifest, m, new_entries)
         if txn_app_id is not None:
             manifest["txns"] = {**(m.get("txns") or {}), txn_app_id: int(txn_version)}
         try:
-            _commit_append(spark, table_path, m, manifest, new_entries)
+            _commit(spark, table_path, manifest, m, new_entries)
             return {
                 "snapshot_id": manifest["snapshot_id"],
                 "files_rewritten": 0,
@@ -5131,7 +5056,7 @@ def copy_into(
     generated columns recompute, identity columns are engine-assigned
     (explicit values refused), CHECK constraints validate the staged
     bytes. Data cost is O(new files); commit metadata is the append
-    fast path (O(new files), ``_commit_append``)."""
+    fast path (O(new files), ``_commit``'s appended form)."""
     from pyspark.sql.types import StructType
 
     fmt = (file_format or "").lower()
@@ -5264,18 +5189,14 @@ def copy_into(
                     spark, table_path, source, file_format, pattern,
                     format_options, force, remaining,
                 )
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": "copy_into",
-            **_carried(m),
-            "check_constraints": cur_checks,
-            "copy_shards": list(m.get("copy_shards") or [])
+        manifest = _child(
+            m, "copy_into", check_constraints=cur_checks,
+            copy_shards=list(m.get("copy_shards") or [])
             + [_write_content_shard(spark, fs, table_path, record)],
-        }
+        )
         _advance_identity(manifest, m, new_entries)
         try:
-            _commit_append(spark, table_path, m, manifest, new_entries)
+            _commit(spark, table_path, manifest, m, new_entries)
             return {
                 "snapshot_id": manifest["snapshot_id"],
                 "files_loaded": len(todo),
@@ -5854,7 +5775,7 @@ def alter_drop_column(spark: SparkSession, table_path: str, col_name: str) -> in
     manifests kept the old schema). Returns the new snapshot id."""
     from pyspark.sql.types import StructType
 
-    m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
+    m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     schema = _snapshot_schema(m)
     if col_name not in schema.fieldNames():
         raise ValueError(f"column {col_name} does not exist")
@@ -5906,62 +5827,34 @@ def alter_drop_column(spark: SparkSession, table_path: str, col_name: str) -> in
             f"cannot drop {col_name}: referenced by generated column(s) "
             f"{gen_broken}; drop those first"
         )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "drop_column",
-        **_carried(m),
-        "schema": narrowed.json(),
-        "bloom_columns": [c for c in (m.get("bloom_columns") or []) if c != col_name],
-        "files": m["files"],
-    }
-    if gen:
-        manifest["generated_columns"] = gen
-    else:
-        manifest.pop("generated_columns", None)
-    # the dropped column's DEFAULT retires with it
-    dflt = {
-        k: v
-        for k, v in (m.get("column_defaults") or {}).items()
-        if k != col_name
-    }
-    if dflt:
-        manifest["column_defaults"] = dflt
-    else:
-        manifest.pop("column_defaults", None)
-    # so does its IDENTITY spec (values stay in retained files' bytes
-    # like any dropped column's)
-    ident = {
-        k: v
-        for k, v in (m.get("identity_columns") or {}).items()
-        if k != col_name
-    }
-    if ident:
-        manifest["identity_columns"] = ident
-    else:
-        manifest.pop("identity_columns", None)
-    # a dropped column leaves no readable narrow vintage behind —
-    # remove it from the widened marker (and lift the bucketed_view
-    # refusal when it was the only one)
-    wc = [c for c in (m.get("widened_columns") or []) if c != col_name]
-    if wc:
-        manifest["widened_columns"] = wc
-    else:
-        manifest.pop("widened_columns", None)
-    # retire the dropped column's PHYSICAL name: retained files keep
-    # its bytes, so a later re-add of the same logical name must map
-    # to a fresh physical name or the stale values would resurrect
+    # the dropped column's DEFAULT and IDENTITY spec retire with it
+    # (identity values stay in retained files' bytes like any dropped
+    # column's); it leaves no readable narrow vintage behind, so it
+    # leaves the widened marker too (lifting the bucketed_view refusal
+    # when it was the only one). Its PHYSICAL name retires: retained
+    # files keep its bytes, so a later re-add of the same logical name
+    # must map to a fresh physical name or the stale values would
+    # resurrect.
     dropped_phys = _phys_map(m).get(col_name, col_name)
     used = list(m.get("used_physical") or [])
     if dropped_phys not in used:
         used.append(dropped_phys)
-    manifest["used_physical"] = used
-    pmap = {k: v for k, v in _phys_map(m).items() if k != col_name}
-    if pmap:
-        manifest["physical_names"] = pmap
-    else:
-        manifest.pop("physical_names", None)
-    return _commit(spark, table_path, manifest)
+
+    def without(d):
+        return {k: v for k, v in (d or {}).items() if k != col_name}
+
+    manifest = _child(
+        m, "drop_column",
+        schema=narrowed.json(),
+        bloom_columns=[c for c in (m.get("bloom_columns") or []) if c != col_name],
+        generated_columns=gen,
+        column_defaults=without(m.get("column_defaults")),
+        identity_columns=without(m.get("identity_columns")),
+        widened_columns=[c for c in (m.get("widened_columns") or []) if c != col_name],
+        used_physical=used,
+        physical_names=without(_phys_map(m)),
+    )
+    return _commit(spark, table_path, manifest, m)
 
 
 _WIDEN_OK: dict[str, tuple[str, ...]] = {
@@ -5992,7 +5885,7 @@ def alter_widen_column(
     the new snapshot id."""
     from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
-    m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
+    m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     schema = _snapshot_schema(m)
     if col_name not in schema.fieldNames():
         raise ValueError(f"column {col_name} does not exist")
@@ -6060,23 +5953,18 @@ def alter_widen_column(
                 f"column(s) {diverged} would recompute to a different type "
                 "than declared; drop and re-add them instead"
             )
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"widen_column_{col_name}_to_{want}",
-        **_carried(m),
-        "schema": widened.json(),
-        "files": m["files"],
-    }
     # record that pre-widening file vintages exist: the engine read
     # path upcasts them through the manifest schema, but a RAW parquet
     # scan (bucketed_view's catalog table) would read the narrow
     # physical type under the widened declared type — the marker lets
     # that path refuse instead of failing version-dependently. A full
     # rewrite (compact) clears it: every file is then current-typed.
-    widened_cols = sorted(set(m.get("widened_columns") or []) | {col_name})
-    manifest["widened_columns"] = widened_cols
-    return _commit(spark, table_path, manifest)
+    manifest = _child(
+        m, f"widen_column_{col_name}_to_{want}",
+        schema=widened.json(),
+        widened_columns=sorted(set(m.get("widened_columns") or []) | {col_name}),
+    )
+    return _commit(spark, table_path, manifest, m)
 
 
 def alter_rename_column(
@@ -6097,7 +5985,7 @@ def alter_rename_column(
     physical-keyed and keep working). Returns the new snapshot id."""
     from pyspark.sql.types import StructField, StructType
 
-    m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
+    m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     schema = _snapshot_schema(m)
     if old_name not in schema.fieldNames():
         raise ValueError(f"column {old_name} does not exist")
@@ -6169,44 +6057,30 @@ def alter_rename_column(
     pmap[new_name] = pmap.pop(old_name, old_name)
     if pmap[new_name] == new_name:
         del pmap[new_name]  # renamed back to its physical name
-    used = list(m.get("used_physical") or [])
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"rename_column_{old_name}_to_{new_name}",
-        **_carried(m),
-        "schema": renamed.json(),
-        "bloom_columns": [
-            new_name if c == old_name else c for c in (m.get("bloom_columns") or [])
-        ],
-        "files": m["files"],
-    }
-    if gen:
-        manifest["generated_columns"] = gen
-    else:
-        manifest.pop("generated_columns", None)
     # a DEFAULT follows its column's logical name (the expression is
     # constant-foldable by declaration, so no expr can reference the
-    # renamed column and break)
+    # renamed column and break); so does an IDENTITY spec (its counter
+    # state is name-keyed metadata; the values live under the
+    # physical name)
     dflt = dict(m.get("column_defaults") or {})
     if old_name in dflt:
         dflt[new_name] = dflt.pop(old_name)
-        manifest["column_defaults"] = dflt
-    # an IDENTITY spec follows the rename too (its counter state is
-    # name-keyed metadata; the values live under the physical name)
     ident = dict(m.get("identity_columns") or {})
     if old_name in ident:
         ident[new_name] = ident.pop(old_name)
-        manifest["identity_columns"] = ident
-    if bspec:
-        manifest["bucket_by"] = bspec
-    if used:
-        manifest["used_physical"] = used
-    if pmap:
-        manifest["physical_names"] = pmap
-    else:
-        manifest.pop("physical_names", None)
-    return _commit(spark, table_path, manifest)
+    manifest = _child(
+        m, f"rename_column_{old_name}_to_{new_name}",
+        schema=renamed.json(),
+        bloom_columns=[
+            new_name if c == old_name else c for c in (m.get("bloom_columns") or [])
+        ],
+        generated_columns=gen,
+        column_defaults=dflt,
+        identity_columns=ident,
+        bucket_by=bspec,
+        physical_names=pmap,
+    )
+    return _commit(spark, table_path, manifest, m)
 
 
 def consume_changes(spark: SparkSession, table_path: str, cursor_path: str):
@@ -6282,15 +6156,9 @@ def truncate(spark: SparkSession, table_path: str) -> dict:
     readable (time travel) and reclaimable (``rollback``) until
     ``vacuum`` expires them — which is also what makes this truncate
     safely reversible, unlike the filesystem wipe it replaces."""
-    m = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": "truncate",
-        **_carried(m),
-        "files": [],
-    }
-    _commit(spark, table_path, manifest)
+    m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
+    manifest = _child(m, "truncate", files=[])
+    _commit(spark, table_path, manifest, m)
     return {"snapshot_id": manifest["snapshot_id"], "files_rewritten": 0,
             "files_untouched": 0, "files_written": 0}
 
@@ -6315,7 +6183,7 @@ def rollback(spark: SparkSession, table_path: str, snapshot: int) -> int:
     easy to roll back FROM. Requires the target snapshot's files to
     still exist (i.e. no vacuum since). Returns the new snapshot id."""
     target = _load_manifest(spark, table_path, snapshot)
-    head = _load_manifest(spark, table_path, current_snapshot(spark, table_path))
+    head = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
     fs, _ = _fs(spark, table_path)
     for f in target["files"]:
         if not fs.exists(_jpath(spark, f"{table_path}/{DATA_DIR}/{f['name']}")):
@@ -6328,26 +6196,26 @@ def rollback(spark: SparkSession, table_path: str, snapshot: int) -> int:
                 f"snapshot {snapshot} is no longer restorable: deletion vector "
                 f"{dv['name']} was vacuumed"
             )
-    manifest = {
-        "snapshot_id": head["snapshot_id"] + 1,
-        "parent": head["snapshot_id"],
-        "operation": f"rollback_to_{snapshot}",
-        **_carried(target),
-        "files": target["files"],
-    }
-    # two pieces of TABLE-LEVEL state must never rewind with the data
-    # (r11 review finding — _carried(target) would revert them):
-    # tags are durable refs to snapshots that all stay readable after
-    # a restore (reverting the map breaks VERSION AS OF '<tag>' and
-    # silently forfeits vacuum's tag retention — file deletion under
-    # a live promise), and identity HIGH-WATER marks must stay
+    # a child of the head (id, parent, the head's txns) with the
+    # target's layout — every key the head carries is replaced or
+    # dropped. Two pieces of TABLE-LEVEL state must never rewind with
+    # the data (r11 review finding — _carried(target) would revert
+    # them): tags are durable refs to snapshots that all stay readable
+    # after a restore (reverting the map breaks VERSION AS OF '<tag>'
+    # and silently forfeits vacuum's tag retention — file deletion
+    # under a live promise), and identity HIGH-WATER marks must stay
     # monotone (a rewound counter re-issues ids already present in
     # still-readable newer snapshots). The identity SPEC itself
     # follows the restored schema; only the counter takes the max.
-    if head.get("tags"):
-        manifest["tags"] = head["tags"]
-    else:
-        manifest.pop("tags", None)
+    manifest = _child(
+        head, f"rollback_to_{snapshot}",
+        **{
+            **dict.fromkeys(_carried(head)),
+            **_carried(target),
+            "files": target["files"],
+            "tags": head.get("tags"),
+        },
+    )
     if manifest.get("identity_columns"):
         # match target and head identity specs by PHYSICAL column
         # name (rename-stable, r12 review fix): a rename between the
@@ -6369,7 +6237,7 @@ def rollback(spark: SparkSession, table_path: str, snapshot: int) -> int:
             hw = (max(cands) if step > 0 else min(cands)) if cands else None
             merged[col] = {**spec, "high_water": hw}
         manifest["identity_columns"] = merged
-    return _commit(spark, table_path, manifest)
+    return _commit(spark, table_path, manifest, head)
 
 
 def add_check_constraint(
@@ -6392,14 +6260,8 @@ def add_check_constraint(
     current = _read_files(spark, table_path, m, [f["name"] for f in m["files"]])
     _validate_constraints(current, {name: expr})
     checks[name] = expr
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"add_constraint_{name}",
-        **_carried(m),
-        "check_constraints": checks,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(m, f"add_constraint_{name}", check_constraints=checks)
+    return _commit(spark, table_path, manifest, m)
 
 
 def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> int:
@@ -6409,14 +6271,8 @@ def drop_check_constraint(spark: SparkSession, table_path: str, name: str) -> in
     if name not in checks:
         raise ValueError(f"no such constraint: {name}")
     del checks[name]
-    manifest = {
-        "snapshot_id": m["snapshot_id"] + 1,
-        "parent": m["snapshot_id"],
-        "operation": f"drop_constraint_{name}",
-        **_carried(m),
-        "check_constraints": checks,
-    }
-    return _commit_carry(spark, table_path, m, manifest)
+    manifest = _child(m, f"drop_constraint_{name}", check_constraints=checks)
+    return _commit(spark, table_path, manifest, m)
 
 
 def table_head_meta(spark: SparkSession, table_path: str) -> dict:
@@ -6436,79 +6292,3 @@ def table_schema(spark: SparkSession, table_path: str):
     return StructType.fromJson(
         json.loads(table_head_meta(spark, table_path)["schema"])
     )
-
-
-def append_staged(
-    spark: SparkSession,
-    table_path: str,
-    entries: list[dict],
-    operation: str = "stream_append",
-    max_retries: int = 5,
-) -> dict:
-    """Commit PRE-STAGED data files as a new-files-only snapshot — the
-    low-level half of :func:`append` for writers that produce the
-    parquet bytes themselves on executors (the ``cowsink`` streaming
-    writer): each ``entries`` item is a manifest file entry
-    (``{"name", "rows", "stats", "nulls"}``) whose file already sits
-    under ``data/``. Same no-read-set optimistic-commit retry loop as
-    ``append``. The ``cowsink`` streaming writer runs the same
-    protocol with plain file I/O (``sources/_staging.commit``: its
-    commit hook runs in a Python worker without a SparkSession).
-    Tables with partition columns or Bloom columns are refused (staged
-    entries carry neither); CHECK constraints are enforced by reading
-    back ONLY the staged files (O(new rows))."""
-    m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
-    if m.get("partition_by"):
-        raise ValueError("append_staged does not support partitioned tables")
-    if m.get("bloom_columns"):
-        raise ValueError("append_staged does not support bloom-indexed tables")
-    if m.get("identity_columns"):
-        # pre-staged bytes carry whatever the external writer put in
-        # the identity column — the engine can neither refuse nor
-        # allocate after the fact, so the whole path refuses (same
-        # contract as the DSv2 writers)
-        raise ValueError(
-            "append_staged does not support IDENTITY tables "
-            f"({sorted(m['identity_columns'])}) — the engine assigns "
-            "identity values; use cowtable.append"
-        )
-    known = {f.name for f in _snapshot_schema(m).fields}
-    for e in entries:
-        bad = set(e.get("stats") or {}) - known
-        if bad:
-            raise ValueError(f"staged entry {e['name']} has unknown columns {bad}")
-    validated_for = m.get("check_constraints") or {}
-    if validated_for and entries:
-        staged = _read_files(spark, table_path, m, [e["name"] for e in entries])
-        _validate_constraints(staged, validated_for)
-    last_err: Exception | None = None
-    for _attempt in range(max_retries + 1):
-        cur_checks = m.get("check_constraints") or {}
-        if cur_checks != validated_for and entries:
-            # a concurrent ADD CONSTRAINT won during the retry window:
-            # re-validate the staged files against the new set before
-            # adopting it (same guard as append())
-            staged = _read_files(spark, table_path, m, [e["name"] for e in entries])
-            _validate_constraints(staged, cur_checks)
-            validated_for = cur_checks
-        manifest = {
-            "snapshot_id": m["snapshot_id"] + 1,
-            "parent": m["snapshot_id"],
-            "operation": operation,
-            **_carried(m),
-            "partition_by": [],
-            "bloom_columns": [],
-            "check_constraints": cur_checks,
-        }
-        try:
-            _commit_append(spark, table_path, m, manifest, entries)
-            return {
-                "snapshot_id": manifest["snapshot_id"],
-                "files_rewritten": 0,
-                "files_untouched": _n_files(spark, table_path, m),
-                "files_written": len(entries),
-            }
-        except CowConcurrentWrite as e:
-            last_err = e
-            m = _load_manifest_meta(spark, table_path, current_snapshot(spark, table_path))
-    raise last_err

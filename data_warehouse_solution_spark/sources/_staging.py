@@ -15,11 +15,16 @@ guard):
   and only then writes one Hive-dir parquet file per partition value
   and bucket, returning manifest entries identical to what
   ``cowtable._stage_files`` records.
-- ``commit`` publishes all staged entries as ONE snapshot: the manifest
-  is linked into place (``os.link`` fails if the snapshot exists — the
-  local-filesystem form of ``cowtable._publish``); a lost race reloads
-  the head and retries, and a table feature that changed since
-  planning fails the write instead of publishing unvetted bytes.
+- ``commit`` publishes all staged entries as ONE snapshot. The
+  manifest is built with the engine's own helpers (``cowtable._child``
+  and ``cowtable._attach_files``), so it carries, shards and stamps
+  exactly like an engine commit; only the I/O differs. It is linked
+  into place with ``os.link``, which fails if the snapshot exists —
+  the writers' publish primitive (their commit hook runs in a Python
+  worker, without a SparkSession), as ``cowtable._publish`` is the
+  engine's. A lost race reloads the head and retries, and a table
+  feature that changed since planning fails the write instead of
+  publishing unvetted bytes.
 
 Dialect caveat: the probes guarantee that DuckDB parses each expression
 and types it like the table, not value parity for every expression.
@@ -31,14 +36,19 @@ engine path (``cowtable.append``).
 from __future__ import annotations
 
 import datetime
-import hashlib
 import json
 import os
 import re
 import uuid
 
-from .. import cowtable
-from ..cowtable import MANIFEST_DIR, _canon_ts, _carried, _STATS_TYPES
+from ..cowtable import (
+    MANIFEST_DIR,
+    _STATS_TYPES,
+    _attach_files,
+    _canon_ts,
+    _child,
+    _shard_name,
+)
 from ..hashing import bloom_build, bucket_of_key
 from ._local import data_dir, load_manifest, manifest_path, snapshots
 
@@ -421,56 +431,17 @@ def drop_staged(table_path, messages):
                 pass
 
 
-def _write_content_shard(table_path, entries):
-    """Content-addressed shard publish, as ``cowtable._write_content_shard``:
-    identical content means an identical name, so the write is skipped;
-    tmp + rename so a concurrent identical writer never interleaves
-    bytes."""
-    blob = json.dumps(entries).encode()
-    name = f"manifest-files-{hashlib.sha256(blob).hexdigest()[:16]}.json"
-    dst = os.path.join(table_path, MANIFEST_DIR, name)
-    if not os.path.exists(dst):
-        tmp = os.path.join(table_path, MANIFEST_DIR, f".tmp-shard-{uuid.uuid4().hex}.json")
-        with open(tmp, "wb") as fh:
-            fh.write(blob)
-        os.replace(tmp, dst)
-    return name
-
-
-def _append_shards(table_path, head, entries, manifest):
-    """Attach ``head ∪ entries`` to ``manifest`` with O(new) metadata
-    I/O, as ``cowtable._commit_append``: a sharded head's shard names
-    are referenced, never loaded or rewritten; only a trailing sub-half
-    shard is read and merged so repeated small commits cannot grow the
-    shard count without bound. Inline heads stay inline (the engine's
-    next commit shards them past the threshold)."""
-    if "file_shards" not in head:
-        manifest["files"] = head["files"] + entries
-        manifest["n_files"] = len(manifest["files"])
-        return
-    rows = cowtable.MANIFEST_SHARD_ROWS
-    names = list(head["file_shards"])
-    tail = list(entries)
-    if names:
-        with open(os.path.join(table_path, MANIFEST_DIR, names[-1])) as fh:
-            last = json.load(fh)
-        if len(last) < rows // 2 and len(last) + len(tail) <= rows:
-            tail = last + tail
-            names.pop()
-    for k in range(0, len(tail), rows):
-        names.append(_write_content_shard(table_path, tail[k : k + rows]))
-    manifest["file_shards"] = names
-    if head.get("n_files") is not None:
-        manifest["n_files"] = int(head["n_files"]) + len(entries)
-
-
-def _link_manifest(table_path, n, manifest) -> bool:
-    """Publish snapshot ``n``; False when a rival already committed it."""
+def _link_manifest(table_path, manifest) -> bool:
+    """Publish ``manifest`` with its commit timestamp; False when a
+    rival already committed its snapshot id."""
+    manifest["committed_at"] = datetime.datetime.now(datetime.timezone.utc).isoformat(
+        timespec="microseconds"
+    )
     tmp = os.path.join(table_path, MANIFEST_DIR, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
     try:
-        os.link(tmp, manifest_path(table_path, n))
+        os.link(tmp, manifest_path(table_path, manifest["snapshot_id"]))
         return True
     except FileExistsError:
         return False
@@ -480,9 +451,30 @@ def _link_manifest(table_path, n, manifest) -> bool:
 
 def commit(spec, messages, operation, label, *, overwrite=False) -> int:
     """Publish the tasks' staged entries as one snapshot (replacing the
-    table's files when ``overwrite``) and return its id."""
+    table's files when ``overwrite``) and return its id. The manifest
+    is built like an engine commit's; only the shard and manifest I/O
+    here is local."""
     table_path = spec["table_path"]
+    mdir = os.path.join(table_path, MANIFEST_DIR)
     entries = [e for m in messages if m is not None for e in (m.entries or [])]
+
+    def read(name):
+        with open(os.path.join(mdir, name)) as fh:
+            return json.load(fh)
+
+    def write(blob):
+        # identical content means an identical name, so the write is
+        # skipped; tmp + rename so a concurrent identical writer never
+        # interleaves bytes
+        name = _shard_name(blob)
+        dst = os.path.join(mdir, name)
+        if not os.path.exists(dst):
+            tmp = os.path.join(mdir, f".tmp-shard-{uuid.uuid4().hex}.json")
+            with open(tmp, "wb") as fh:
+                fh.write(blob)
+            os.replace(tmp, dst)
+        return name
+
     for _attempt in range(_COMMIT_ATTEMPTS):
         head = load_manifest(table_path, snapshots(table_path)[-1], expand=False)
         changed = [what for k, what in _FEATURES.items() if (head.get(k) or None) != spec[k]]
@@ -494,23 +486,13 @@ def commit(spec, messages, operation, label, *, overwrite=False) -> int:
                 f"{label}: {'/'.join(changed)} changed on {table_path} since "
                 "the write was planned; re-run it"
             )
-        n = head["snapshot_id"] + 1
-        manifest = {
-            **_carried(head),
-            "snapshot_id": n,
-            "parent": head["snapshot_id"],
-            "operation": operation,
-            "committed_at": datetime.datetime.now(datetime.timezone.utc).isoformat(
-                timespec="microseconds"
-            ),
-        }
-        if head.get("txns"):
-            manifest["txns"] = head["txns"]
         if overwrite:
-            manifest["files"] = entries
+            manifest = _attach_files(
+                _child(head, operation, files=entries), head, None, read, write
+            )
         else:
-            _append_shards(table_path, head, entries, manifest)
-        if _link_manifest(table_path, n, manifest):
-            return n
+            manifest = _attach_files(_child(head, operation), head, entries, read, write)
+        if _link_manifest(table_path, manifest):
+            return manifest["snapshot_id"]
     drop_staged(table_path, messages)
     raise RuntimeError(f"{label}: lost {_COMMIT_ATTEMPTS} commit races at {table_path}")

@@ -37,7 +37,7 @@ protocol):
   at-least-once delivery, exactly-once table effect. The manifest
   publish is an ``os.link`` (fails if the target snapshot exists),
   which is the local-FS equivalent of the exists-check + rename
-  ``cowtable._commit`` does — losing a race
+  ``cowtable._publish`` does — losing a race
   against a concurrent writer reloads the head and retries, exactly
   like ``cowtable.append``; a mid-stream appearance of a feature the
   sink cannot honor (constraints/partitioning/blooms) fails the

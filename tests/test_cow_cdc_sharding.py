@@ -295,18 +295,14 @@ def test_append_retries_lost_commit_race(spark, tmp_path, monkeypatch):
     real_commit = cow._commit
     state = {"raced": False}
 
-    def racing_commit(sp, table_path, manifest):
+    def racing_commit(sp, table_path, manifest, base, append=None):
         if not state["raced"] and manifest["operation"] == "append":
             state["raced"] = True
             # a competitor wins the SAME snapshot id first (its commit
             # carries only the pre-existing files)
-            competitor = {
-                **manifest,
-                "operation": "competitor_noop",
-                "files": [f for f in manifest["files"] if f["name"].startswith("snap00000001")],
-            }
-            real_commit(sp, table_path, competitor)
-        return real_commit(sp, table_path, manifest)
+            competitor = {**manifest, "operation": "competitor_noop"}
+            real_commit(sp, table_path, competitor, base)
+        return real_commit(sp, table_path, manifest, base, append)
 
     monkeypatch.setattr(cow, "_commit", racing_commit)
     stats = cow.append(spark, path, spark.range(100, 103).withColumnRenamed("id", "k"))
@@ -322,10 +318,10 @@ def test_append_exhausts_retries_raises(spark, tmp_path, monkeypatch):
     cow.create(spark, path, spark.range(5).withColumnRenamed("id", "k"))
     real_commit = cow._commit
 
-    def always_beaten(sp, table_path, manifest):
+    def always_beaten(sp, table_path, manifest, base, append=None):
         if manifest["operation"] == "append":
-            real_commit(sp, table_path, {**manifest, "operation": "competitor_noop"})
-        return real_commit(sp, table_path, manifest)
+            real_commit(sp, table_path, {**manifest, "operation": "competitor_noop"}, base)
+        return real_commit(sp, table_path, manifest, base, append)
 
     monkeypatch.setattr(cow, "_commit", always_beaten)
     with pytest.raises(cow.CowConcurrentWrite):
@@ -472,7 +468,7 @@ def test_lost_sharded_commit_race_cannot_corrupt_winner(spark, tmp_path, monkeyp
         "files": m_stale["files"],
     }
     with pytest.raises(cow.CowConcurrentWrite):
-        cow._commit(spark, path, loser_manifest)
+        cow._commit(spark, path, loser_manifest, m_stale)
     # the winner's snapshot must still load, full file list intact
     reread = cow._load_manifest(spark, path, 2)
     assert {f["name"] for f in reread["files"]} == {f["name"] for f in winner["files"]}
@@ -642,15 +638,27 @@ def test_history_and_describe_read_zero_shards(spark, tmp_path, monkeypatch):
     )
 
 
-def test_metadata_only_commit_is_o1_on_sharded_table(spark, tmp_path, monkeypatch):
-    # r13: a tag on a sharded table writes ZERO shards AND never reads
-    # one — the child references the parent's shard names verbatim
-    # (_commit_carry), so a metadata-only commit is O(1) at any size.
+_METADATA_ONLY_VERBS = {
+    "create_tag": lambda sp, p: cow.create_tag(sp, p, "zero_io"),
+    "drop_column": lambda sp, p: cow.alter_drop_column(sp, p, "v"),
+    "widen_column": lambda sp, p: cow.alter_widen_column(sp, p, "i", "bigint"),
+    "rename_column": lambda sp, p: cow.alter_rename_column(sp, p, "v", "w"),
+}
+
+
+@pytest.mark.parametrize("verb", list(_METADATA_ONLY_VERBS))
+def test_metadata_only_commit_is_o1_on_sharded_table(spark, tmp_path, monkeypatch, verb):
+    # r13: a tag, column drop, widen or rename on a sharded table
+    # writes ZERO shards AND never reads one — the child references
+    # the parent's shard names verbatim, so a metadata-only commit is
+    # O(1) at any size.
     monkeypatch.setattr(cow, "MANIFEST_SHARD_ROWS", 4)
     path = str(tmp_path / "tagmeta")
     cow.create(
         spark, path,
-        spark.range(40).selectExpr("id as k", "cast(id as double) as v").repartition(10),
+        spark.range(40)
+        .selectExpr("id as k", "cast(id as double) as v", "cast(id as int) as i")
+        .repartition(10),
     )
     cow._SHARD_CACHE.clear()
     reads = []
@@ -658,12 +666,20 @@ def test_metadata_only_commit_is_o1_on_sharded_table(spark, tmp_path, monkeypatc
     monkeypatch.setattr(
         cow, "_read_shard", lambda s, p: (reads.append(p), real(s, p))[1]
     )
-    cow.create_tag(spark, path, "zero_io")
-    assert reads == [], f"tag commit read shards: {reads}"
+    _METADATA_ONLY_VERBS[verb](spark, path)
+    assert reads == [], f"{verb} commit read shards: {reads}"
     raw1 = cow.json.loads(cow._read_file(spark, cow._manifest_path(path, 1)).decode())
     raw2 = cow.json.loads(cow._read_file(spark, cow._manifest_path(path, 2)).decode())
     assert raw2["file_shards"] == raw1["file_shards"]  # same names, by reference
     assert raw2["n_files"] == raw1["n_files"] and raw2["n_rows"] == raw1["n_rows"]
     monkeypatch.setattr(cow, "_read_shard", real)
-    assert cow.read(spark, path).count() == 40
-    assert cow.resolve_ref(spark, path, "zero_io") == 1
+    got = cow.read(spark, path)
+    assert got.count() == 40
+    if verb == "create_tag":
+        assert cow.resolve_ref(spark, path, "zero_io") == 1
+    else:
+        assert dict(got.dtypes) == {
+            "drop_column": {"k": "bigint", "i": "int"},
+            "widen_column": {"k": "bigint", "v": "double", "i": "bigint"},
+            "rename_column": {"k": "bigint", "w": "double", "i": "int"},
+        }[verb]

@@ -224,13 +224,6 @@ def test_replace_where_refuses_explicit_and_allocates(spark, tmp_path):
     assert {r["k"] for r in rows} == {0, 1, 2, 3, 4, 7}
 
 
-def test_append_staged_refuses_identity_tables(spark, tmp_path):
-    p = str(tmp_path / "t")
-    _mk(spark, p)
-    with pytest.raises(ValueError, match="IDENTITY"):
-        cow.append_staged(spark, p, [])
-
-
 def test_rollback_across_rename_keeps_high_water(spark, tmp_path):
     """r12 review fix: rollback merges identity high-water marks by
     PHYSICAL column name, so a rename between the restore target and

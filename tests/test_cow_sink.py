@@ -1,6 +1,7 @@
 """``cowsink`` streaming-writer contract tests beyond the registry
 roundtrip: replayed-batch idempotence, commit-race retry against a
-rival writer, unsupported-table refusals, and ``append_staged``."""
+rival writer, unsupported-table refusals, and the file/row count
+stamps that writer commits (``cowsink`` and ``format("cow")``) keep."""
 
 from __future__ import annotations
 
@@ -154,39 +155,6 @@ def test_refuses_unsupported_tables(spark):
     )
     with pytest.raises(ValueError, match="declares"):
         _writer(spark, drift)
-
-
-def test_append_staged_validates_and_commits(spark):
-    """The batch-side half of the same protocol: pre-staged parquet
-    files commit as one snapshot; CHECK constraints are enforced by
-    reading back only the staged files."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    path = _fresh("staged")
-    cow.create(
-        spark,
-        path,
-        spark.createDataFrame([(1, 5.0)], "k long, v double"),
-        check_constraints={"vpos": "v > 0"},
-    )
-    data_dir = os.path.join(path, "data")
-    t = pa.table({"k": [2], "v": [7.5]}, schema=pa.schema([("k", pa.int64()), ("v", pa.float64())]))
-    pq.write_table(t, os.path.join(data_dir, "staged-ok.parquet"))
-    stats = cow.append_staged(
-        spark, path,
-        [{"name": "staged-ok.parquet", "rows": 1, "stats": {"k": [2, 2], "v": [7.5, 7.5]}, "nulls": {}}],
-    )
-    assert stats["files_written"] == 1
-    assert cow.read(spark, path).count() == 2
-    bad = pa.table({"k": [3], "v": [-1.0]}, schema=pa.schema([("k", pa.int64()), ("v", pa.float64())]))
-    pq.write_table(bad, os.path.join(data_dir, "staged-bad.parquet"))
-    with pytest.raises(cow.CowConstraintViolation):
-        cow.append_staged(
-            spark, path,
-            [{"name": "staged-bad.parquet", "rows": 1, "stats": {"k": [3, 3], "v": [-1.0, -1.0]}, "nulls": {}}],
-        )
-    assert cow.read(spark, path).count() == 2
 
 
 def test_distinct_queries_do_not_cross_replay(spark):
@@ -559,3 +527,79 @@ def test_sink_commit_carries_tags_defaults_txns(spark):
     cow.append(spark, path, spark.createDataFrame([(3, 3.5)], "k long, v double"))
     got = {r["k"]: r["s"] for r in cow.read(spark, path).collect()}
     assert got[3] == "dflt", "default stopped applying after sink commit"
+
+
+@pytest.mark.parametrize("writer", ["cowsink", "cow_append", "cow_overwrite"])
+def test_writer_commits_keep_count_stamps(spark, monkeypatch, writer):
+    """A writer commit onto a SHARDED head, and every engine append
+    after it, stamps ``n_files`` / ``n_rows`` / ``n_rows_live`` equal
+    to the snapshot's live counts, so ``history()`` reads manifest
+    propers only."""
+    from data_warehouse_solution_spark.sources.cow_batch import register_cow_batch
+
+    monkeypatch.setattr(cow, "MANIFEST_SHARD_ROWS", 4)
+    path = _fresh(f"stamps_{writer}")
+    schema = "k long, v double, s string"
+    cow.create(spark, path, spark.createDataFrame([(0, 0.5, "seed")], schema))
+    for i in range(6):
+        cow.append(spark, path, spark.createDataFrame([(10 + i, 1.0, "x")], schema))
+    head = json.loads(cow._read_file(spark, cow._manifest_path(path, 7)).decode())
+    assert "file_shards" in head  # the writer commits onto a sharded head
+    batch = [(100, 1.5, "a"), (101, 2.5, "b")]
+    if writer == "cowsink":
+        w = _writer(spark, path)
+        w.commit([w.write(iter(_rows(spark, batch)))], batchId=0)
+    else:
+        register_cow_batch(spark)
+        (
+            spark.createDataFrame(batch, schema)
+            .write.format("cow")
+            .option("tablePath", path)
+            .mode("overwrite" if writer == "cow_overwrite" else "append")
+            .save()
+        )
+    assert cow.current_snapshot(spark, path) == 8
+    for i in range(3):
+        cow.append(spark, path, spark.createDataFrame([(200 + i, 3.0, "z")], schema))
+    want = {}
+    for n in range(8, 12):
+        files = cow._load_manifest(spark, path, n)["files"]
+        want[n] = (len(files), sum(f["rows"] for f in files), cow.read(spark, path, n).count())
+        raw = json.loads(cow._read_file(spark, cow._manifest_path(path, n)).decode())
+        assert (raw.get("n_files"), raw.get("n_rows"), raw.get("n_rows_live")) == want[n], n
+    loads = []
+    real = cow._load_manifest
+    monkeypatch.setattr(
+        cow, "_load_manifest", lambda s, p, n: (loads.append(n), real(s, p, n))[1]
+    )
+    got = {
+        r["snapshot_id"]: (r["n_files"], r["n_rows"], r["n_rows_live"])
+        for r in cow.history(spark, path)
+    }
+    assert [n for n in loads if n >= 8] == [], f"history expanded snapshots {loads}"
+    assert {n: got[n] for n in want} == want
+
+
+def test_append_onto_unstamped_head_stamps_again(spark, monkeypatch):
+    """A sharded head without ``n_rows`` stamps (written before writer
+    commits stamped them) does not propagate the gap: the next engine
+    append counts the head's entries once and stamps its own snapshot."""
+    monkeypatch.setattr(cow, "MANIFEST_SHARD_ROWS", 4)
+    path = _fresh("restamp")
+    schema = "k long, v double, s string"
+    cow.create(spark, path, spark.createDataFrame([(0, 0.5, "seed")], schema))
+    for i in range(6):
+        cow.append(spark, path, spark.createDataFrame([(10 + i, 1.0, "x")], schema))
+    mpath = cow._manifest_path(path, 7)
+    head = json.loads(cow._read_file(spark, mpath).decode())
+    assert "file_shards" in head
+    for k in ("n_rows", "n_rows_live"):
+        head.pop(k)
+    cow._write_file(spark, mpath, json.dumps(head).encode())
+    cow._purge_table_caches(path)
+    cow.append(spark, path, spark.createDataFrame([(99, 9.5, "z")], schema))
+    raw = json.loads(cow._read_file(spark, cow._manifest_path(path, 8)).decode())
+    files = cow._load_manifest(spark, path, 8)["files"]
+    assert (raw["n_files"], raw["n_rows"], raw["n_rows_live"]) == (
+        len(files), sum(f["rows"] for f in files), cow.read(spark, path).count()
+    )
